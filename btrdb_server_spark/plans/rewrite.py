@@ -262,9 +262,7 @@ def rewrite_aligned_stat(df: DataFrame, ladder: "RollupLadder") -> DataFrame:
         mask = (1 << pw) - 1
         if (start & mask) or (end & mask):
             return df  # unaligned bounds: boundary buckets would differ
-        candidates = [
-            l for l in ladder.levels if l <= pw and ladder.level(l) is not None
-        ]
+        best = ladder.best_level(lambda l: l <= pw)
     else:  # arbitrary-width tumbling windows
         wstart, width = m["wstart"], m["width"]
         if m["wshape"] == "floor" and max(end - wstart, wstart - start) > (1 << 52):
@@ -280,18 +278,14 @@ def rewrite_aligned_stat(df: DataFrame, ladder: "RollupLadder") -> DataFrame:
         # window (width and window origin both 2**l-aligned) and the scan
         # bounds must be bucket boundaries (start/end 2**l-aligned), so the
         # level's rows tile the filtered points with no straddlers.
-        candidates = [
-            l
-            for l in ladder.levels
-            if ladder.level(l) is not None
-            and width % (1 << l) == 0
+        best = ladder.best_level(
+            lambda l: width % (1 << l) == 0
             and start % (1 << l) == 0
             and end % (1 << l) == 0
             and wstart % (1 << l) == 0
-        ]
-    if not candidates:
+        )
+    if best is None:
         return df
-    best = max(candidates)
     if m["fleet"]:
         # Fleet shape: chunk-range-pruned scan of the whole level (the
         # serve_aligned_all path), optionally narrowed to the IN-list.

@@ -46,9 +46,12 @@ from btrdb_server_spark.operators.stat import align_floor
 # Default ladder: pw 12 (~4.1 µs) up to pw 48 (~3.26 d), step 6.
 DEFAULT_LEVELS = tuple(range(12, 49, PWFACTOR))
 
-_ROLLUP_SCHEMA = (
+# On-disk level schema: the rollup columns plus the (uuid_bucket, chunk)
+# partition columns. Levels are always read with it, so opening a level
+# never runs a footer-sampling job.
+_LEVEL_SCHEMA = (
     "uuid string, bucket long, vmin double, vsum double, vq long,"
-    " vmax double, cnt long"
+    " vmax double, cnt long, uuid_bucket long, chunk long"
 )
 
 # Canonical rollup columns, used by every select so the schema stays stable
@@ -298,6 +301,19 @@ class RollupLadder:
     def _chunk_shift(self, pw: int) -> int:
         return max(pw + self.chunk_pw, self.min_chunk_shift)
 
+    def has_level(self, pw: int) -> bool:
+        """Whether level pw is materialized — a directory check, not a
+        Spark job."""
+        return os.path.exists(self._level_path(pw))
+
+    def best_level(self, fits) -> Optional[int]:
+        """The coarsest materialized level `l` with `fits(l)`, or None: the
+        candidate scan of every ladder-serve path."""
+        return max(
+            (l for l in self.levels if fits(l) and self.has_level(l)),
+            default=None,
+        )
+
     def level(self, pw: int) -> Optional[DataFrame]:
         """Canonical rollup columns (partition columns dropped) — the
         maintenance-path view."""
@@ -307,10 +323,10 @@ class RollupLadder:
         )
 
     def _level_raw(self, pw: int) -> Optional[DataFrame]:
-        p = self._level_path(pw)
-        if not os.path.exists(p):
+        if not self.has_level(pw):
             return None
-        return self.spark.read.option("basePath", p).parquet(p)
+        p = self._level_path(pw)
+        return self.spark.read.schema(_LEVEL_SCHEMA).option("basePath", p).parquet(p)
 
     def _level_for_stream(
         self,
@@ -437,8 +453,7 @@ class RollupLadder:
             ).localCheckpoint(eager=True)
             if batch_id is not None and self.level_last_batch(pw) >= batch_id:
                 continue  # replay: this level already folded this batch
-            old = self.level(pw)
-            if old is None:
+            if not self.has_level(pw):
                 self._write_level(pw, delta)
             else:
                 pred = self._touched_pred(delta, pw)
@@ -469,7 +484,7 @@ class RollupLadder:
             .first()[0]
         )
         for pw in self.levels:
-            if self._level_raw(pw) is None:
+            if not self.has_level(pw):
                 continue
             lo = align_floor(start, pw)
             hi = align_floor(end - 1, pw) + (1 << pw)
@@ -532,14 +547,13 @@ class RollupLadder:
         year — reads the hot rollup tier (chunk-range pruned), never raw
         points. Falls back to the raw fleet aggregation below the finest
         level."""
-        candidates = [l for l in self.levels if l <= pw and self.level(l) is not None]
-        if not candidates:
+        best = self.best_level(lambda l: l <= pw)
+        if best is None:
             from btrdb_server_spark.operators.stat import (
                 aligned_windows_all_streams,
             )
 
             return aligned_windows_all_streams(points, start, end, pw)
-        best = max(candidates)
         fstart, fend = align_floor(start, pw), align_floor(end, pw)
         shift = self._chunk_shift(best)
         lvl = self._level_raw(best).where(
@@ -576,10 +590,9 @@ class RollupLadder:
             raise ValueError("window width must be positive")
         if not 0 <= depth <= 63:
             raise ValueError("window depth invalid")  # quasar.go:318
-        candidates = [l for l in self.levels if l <= depth and self.level(l) is not None]
-        if depth <= 0 or not candidates:
+        best = self.best_level(lambda l: l <= depth)
+        if depth <= 0 or best is None:
             return windows(points, uuid, start, end, width, depth)
-        best = max(candidates)
         end = end - (end - start) % width
         n_windows = (end - start) // width
         lvl = self._level_for_stream(
@@ -633,9 +646,8 @@ class RollupLadder:
         """AlignedWindows routed to the best materialized level <= pw; falls
         back to raw points when the query is finer than the finest level
         (qtree.go:874-895 leaf read)."""
-        candidates = [l for l in self.levels if l <= pw and self.level(l) is not None]
-        if candidates:
-            best = max(candidates)
+        best = self.best_level(lambda l: l <= pw)
+        if best is not None:
             return stat_from_rollup(
                 self._level_for_stream(best, uuid, align_floor(start, pw), align_floor(end, pw)),
                 best,

@@ -33,10 +33,15 @@ Scale stance: this is a CONTROL-PLANE door, not the data plane. Results
 stream through the driver by design (the reference's gRPC responses do
 too — serve.go pages qtree results through one goroutine); bulk analytics
 belong on the embedded DataFrame API / SQL surface, where results never
-leave the cluster. Requests are serialized with a coarse lock: the
-parallelism lives INSIDE each Spark job, and facade mutations (write
-buffer, registry CAS) are not concurrency-safe per stream — the reference
-holds per-stream mutexes for the same reason (pqm.go).
+leave the cluster. Requests pass a writer-preferring reader/writer lock:
+read RPCs share it, so their planning and Spark jobs overlap; mutating
+RPCs (Insert, Delete, Flush, Obliterate, Create, SetStreamAnnotations)
+hold it alone, because facade mutations (write buffer, registry CAS) are
+not concurrency-safe per stream — the reference holds per-stream mutexes
+for the same reason (pqm.go). Reads only read facade state (the one memo
+they fill, the registry DataFrame, is idempotent, so two readers racing
+to build it agree), and each store read pins one manifest snapshot
+(store.py points_at).
 
 FaultInject mirrors the reference's default-disabled behavior
 (serve.go:797-822 requires BTRDB_ENABLE_FAULT_INJECT): it answers an
@@ -48,6 +53,7 @@ from __future__ import annotations
 
 import json
 import threading
+from contextlib import contextmanager
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Optional
 
@@ -94,6 +100,60 @@ def _from_kv(rows: Optional[list]) -> dict:
     return out
 
 
+class _ReadWriteLock:
+    """Writer-preferring reader/writer lock. Any number of readers hold it
+    together; a writer holds it alone. A waiting writer blocks NEW readers,
+    so a steady stream of overlapping reads cannot starve a mutation."""
+
+    def __init__(self):
+        self._cond = threading.Condition()
+        self._readers = 0
+        self._writing = False
+        self._writers_waiting = 0
+
+    @contextmanager
+    def read(self):
+        with self._cond:
+            while self._writing or self._writers_waiting:
+                self._cond.wait()
+            self._readers += 1
+        try:
+            yield
+        finally:
+            with self._cond:
+                self._readers -= 1
+                if not self._readers:
+                    self._cond.notify_all()
+
+    @contextmanager
+    def write(self):
+        with self._cond:
+            self._writers_waiting += 1
+            try:
+                while self._writing or self._readers:
+                    self._cond.wait()
+            finally:
+                self._writers_waiting -= 1
+            self._writing = True
+        try:
+            yield
+        finally:
+            with self._cond:
+                self._writing = False
+                self._cond.notify_all()
+
+
+# RPCs that only read facade state share the request lock; every other RPC
+# (Insert, Delete, Flush, Obliterate, Create, SetStreamAnnotations — and any
+# RPC added later until it is listed here) holds it alone.
+_READ_RPCS = frozenset({
+    "RawValues", "ArrowRawValues", "ArrowAlignedWindows", "AlignedWindows",
+    "Windows", "Nearest", "Changes", "StreamInfo", "LookupStreams",
+    "ListCollections", "GetMetadataUsage", "GenerateCSV", "Info",
+    "FaultInject",
+})
+
+
 def _descriptor(row) -> dict:
     return {
         "uuid": row["uuid"],
@@ -111,7 +171,7 @@ class BTrDBHttpServer:
     def __init__(self, db, host: str = "127.0.0.1", port: int = 0,
                  enable_fault_inject: bool = False):
         self.db = db
-        self._lock = threading.Lock()
+        self._lock = _ReadWriteLock()
         self._enable_fault_inject = enable_fault_inject
         outer = self
 
@@ -159,6 +219,8 @@ class BTrDBHttpServer:
         except json.JSONDecodeError:
             h.send_error(400, "body must be JSON")
             return
+        # Read RPCs share the lock and mutating RPCs hold it alone, so a
+        # facade mutation never runs while a read is inside the facade.
         # The lock covers the RPC call and — for streaming RPCs — only the
         # LAUNCH of the result iteration (planning, facade/version reads,
         # the first page), never the client drain: results page out via
@@ -173,7 +235,8 @@ class BTrDBHttpServer:
         # is the wire contract, and a TypeError from a wrong-typed JSON
         # field must not reset the connection.
         stream = first = None
-        with self._lock:
+        lock = self._lock.read if method in _READ_RPCS else self._lock.write
+        with lock():
             try:
                 out = fn(req)
                 if hasattr(out, "__next__"):  # streaming RPC -> ndjson

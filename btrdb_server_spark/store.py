@@ -98,6 +98,10 @@ _WRITE_TUNING = {
 # rewrite doubles 7.0 -> 14.7 s; throughput_bench.py).
 FRESH_BUCKET = -1  # sentinel uuid_bucket partition for not-yet-compacted versions
 
+# Interval tombstones (deletes/): a point of `uuid` with start <= time < end
+# and ins_ver < ver is invisible at every version >= ver.
+DELETES_SCHEMA = "uuid string, start long, end long, ver long"
+
 
 class BTrDBError(Exception):
     """Engine error with a code mirroring bte/errors.go:146-270."""
@@ -196,9 +200,10 @@ class PointStore:
         manifest. compact() never mutates a generation in place: it builds
         the next one and flips this pointer in one atomic manifest write,
         so a reader planned at any moment sees a complete directory."""
-        return os.path.join(
-            self.path, self._read_manifest().get("points_dir", "points")
-        )
+        return self._points_dir(self._read_manifest())
+
+    def _points_dir(self, m: dict) -> str:
+        return os.path.join(self.path, m.get("points_dir", "points"))
 
     # ------------------------------------------------------------ manifest --
 
@@ -361,9 +366,7 @@ class PointStore:
             raise BTrDBError(ERR_INVALID_TIME_RANGE, "start >= end")
         m = self._read_manifest()
         v = m["version"] + 1
-        df = self.spark.createDataFrame(
-            [(uuid, start, end, v)], "uuid string, start long, end long, ver long"
-        )
+        df = self.spark.createDataFrame([(uuid, start, end, v)], DELETES_SCHEMA)
         df.write.mode("append").parquet(self.deletes_path)
         m["version"] = v
         m["streams"][uuid] = v
@@ -381,36 +384,47 @@ class PointStore:
     # --------------------------------------------------------------- reads --
 
     # On-disk plane: (uuid, time, value) data columns under
-    # ins_ver=/uuid_bucket= partition dirs. The schema is EXPLICIT on every
-    # read — no footer sampling per query, and a generation whose rewrite
-    # set was empty (e.g. a compaction folding a fully-tombstoned tail)
-    # reads as an empty DataFrame instead of failing schema inference.
+    # ins_ver=/uuid_bucket= partition dirs, and the tombstone dataset. The
+    # schema is EXPLICIT on every read — no footer-sampling job per query,
+    # and a generation whose rewrite set was empty (e.g. a compaction
+    # folding a fully-tombstoned tail) reads as an empty DataFrame instead
+    # of failing schema inference.
+    #
+    # Every read resolves the generation, version and has_* flags from ONE
+    # manifest snapshot `m`: a writer in the same process (IngestPipeline
+    # beside the wire server) can commit an insert and a compaction between
+    # two manifest reads, and mixing the old version with the new
+    # generation would filter ins_ver <= v against a base written at v+1 —
+    # an empty answer.
     _READ_SCHEMA = (
         "uuid string, time long, value double, ins_ver long, uuid_bucket long"
     )
 
-    def _raw_points(self) -> DataFrame:
-        if not self._read_manifest().get("has_points"):
+    def _raw_points(self, m: dict) -> DataFrame:
+        if not m.get("has_points"):
             return self.spark.createDataFrame([], self._READ_SCHEMA)
+        pdir = self._points_dir(m)
         return (
             self.spark.read.schema(self._READ_SCHEMA)
-            .option("basePath", self.points_path)
-            .parquet(self.points_path)
+            .option("basePath", pdir)
+            .parquet(pdir)
         )
 
-    def _deletes(self) -> Optional[DataFrame]:
-        if not self._read_manifest().get("has_deletes"):
+    def _deletes(self, m: dict) -> Optional[DataFrame]:
+        if not m.get("has_deletes"):
             return None
-        return self.spark.read.parquet(self.deletes_path)
+        return self.spark.read.schema(DELETES_SCHEMA).parquet(self.deletes_path)
 
     def points_at(
-        self, version: Optional[int] = None, prefilter=None
+        self, version: Optional[int] = None, prefilter=None,
+        m: Optional[dict] = None,
     ) -> DataFrame:
         """MVCC-visible (uuid, time, value) snapshot as of `version`
         (None = latest). The ins_ver filter is partition pruning; the
         tombstone check is a broadcast anti-join. `prefilter` is an optional
-        partition-level predicate (e.g. uuid_bucket) applied at the scan."""
-        m = self._read_manifest()
+        partition-level predicate (e.g. uuid_bucket) applied at the scan.
+        `m` is the manifest snapshot to plan against (default: read once)."""
+        m = m or self._read_manifest()
         v = m["version"] if version is None else version
         compacted = m.get("compacted_through", 0)
         if v < compacted:
@@ -418,10 +432,10 @@ class PointStore:
                 ERR_INVALID_TIME_RANGE,
                 f"version {v} predates compaction point {compacted}",
             )
-        pts = self._raw_points().where(F.col("ins_ver") <= F.lit(v))
+        pts = self._raw_points(m).where(F.col("ins_ver") <= F.lit(v))
         if prefilter is not None:
             pts = pts.where(prefilter)
-        dels = self._deletes()
+        dels = self._deletes(m)
         if dels is not None:
             dels = dels.where(F.col("ver") <= F.lit(v)).select(
                 F.col("uuid").alias("d_uuid"),
@@ -538,12 +552,12 @@ class PointStore:
             # partition-pruned to the sentinel dirs, the deletes dataset is
             # metadata-sized by construction.
             fresh = (
-                self._raw_points()
+                self._raw_points(m)
                 .where(F.col("uuid_bucket") == F.lit(FRESH_BUCKET))
                 .select(bucket_of.alias("b"))
                 .distinct()
             )
-            dels = self._deletes()
+            dels = self._deletes(m)
             if dels is not None:
                 # `ver > compacted` excludes tombstone files RETAINED for
                 # lagging delete-feeds (folded into the base by an earlier
@@ -556,10 +570,10 @@ class PointStore:
             touched = sorted({r.b for r in fresh.collect()})
 
         if touched is None:  # full rewrite: every row re-read and re-routed
-            rewrite = self.points_at(None)
+            rewrite = self.points_at(None, m=m)
         elif touched:  # incremental: only touched base buckets + fresh tail
             scan_pred = F.col("uuid_bucket").isin([FRESH_BUCKET] + touched)
-            rewrite = self.points_at(None, prefilter=scan_pred).where(
+            rewrite = self.points_at(None, prefilter=scan_pred, m=m).where(
                 bucket_of.isin(touched)
             )
         else:  # version moved but nothing owns a bucket: link-only carry
@@ -701,14 +715,15 @@ class PointStore:
         is unanswerable (per-version history is folded into the snapshot,
         whose rows all carry the compaction version — diffing across it
         would report the entire snapshot as changed)."""
-        compacted = self._read_manifest().get("compacted_through", 0)
+        m = self._read_manifest()
+        compacted = m.get("compacted_through", 0)
         if from_ver < compacted:
             raise BTrDBError(
                 ERR_INVALID_TIME_RANGE,
                 f"from_ver {from_ver} predates compaction point {compacted}",
             )
         ins = (
-            self._raw_points()
+            self._raw_points(m)
             .where(
                 (F.col("uuid") == F.lit(uuid))
                 & (F.col("ins_ver") > F.lit(from_ver))
@@ -720,7 +735,7 @@ class PointStore:
             .distinct()
             .select("start", (F.col("start") + F.lit(1 << resolution)).alias("end"))
         )
-        dels = self._deletes()
+        dels = self._deletes(m)
         if dels is not None:
             dranges = dels.where(
                 (F.col("uuid") == F.lit(uuid))

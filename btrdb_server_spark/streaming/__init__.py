@@ -5,6 +5,8 @@ from btrdb_server_spark.streaming.ingest import IngestPipeline
 
 __all__ = ["IngestPipeline", "bounded_state_partitions"]
 
+_PARTITIONS_ENV = "SPARK_GRAFT_STREAM_STATE_PARTITIONS"
+
 
 @contextmanager
 def bounded_state_partitions(spark, parts: int | None = None):
@@ -42,9 +44,18 @@ def bounded_state_partitions(spark, parts: int | None = None):
     4 regardless of the measured per-query optimum (streaming_stat_state:
     6.5 s @4 vs 4.0 s @16 at sf0.1, interleaved best-of-2).
     """
-    env = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-    if env:
-        parts = int(env)
+    env = os.environ.get(_PARTITIONS_ENV)
+    if env is not None:
+        # Set means set: an empty or non-positive value is a deployment
+        # mistake, not "unset", so it fails instead of being ignored.
+        try:
+            parts = int(env)
+        except ValueError:
+            parts = 0
+        if parts < 1:
+            raise ValueError(
+                f"{_PARTITIONS_ENV} must be a positive integer, got {env!r}"
+            )
     elif parts is None:
         parts = 4
     key = "spark.sql.shuffle.partitions"

@@ -378,9 +378,9 @@ def changefeed_deletes(
     are invisible to batch readers: the MVCC anti-join requires
     ins_ver < ver and every post-compaction row carries the compaction
     version, which no folded tombstone outranks."""
-    reader = store.spark.readStream.schema(
-        "uuid string, start long, end long, ver long"
-    )
+    from btrdb_server_spark.store import DELETES_SCHEMA
+
+    reader = store.spark.readStream.schema(DELETES_SCHEMA)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.parquet(store.deletes_path)

@@ -1010,3 +1010,28 @@ def test_in_scan_fence_variant_still_fails_phantoms(spark, tmp_path):
         q.awaitTermination(120)
         raise AssertionError("in-scan fenced phantom batch must fail")
     assert rows == []
+
+
+@pytest.mark.parametrize("value", ["", "abc", "0", "-2"])
+def test_state_partitions_env_rejects_invalid_value(spark, monkeypatch, value):
+    """SPARK_GRAFT_STREAM_STATE_PARTITIONS, once set, must be a positive
+    integer: an empty or malformed value fails loudly, naming the variable,
+    instead of being ignored."""
+    from btrdb_server_spark.streaming import bounded_state_partitions
+
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", value)
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    with pytest.raises(ValueError, match="SPARK_GRAFT_STREAM_STATE_PARTITIONS"):
+        with bounded_state_partitions(spark, 16):
+            pass
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def test_state_partitions_env_overrides_caller(spark, monkeypatch):
+    from btrdb_server_spark.streaming import bounded_state_partitions
+
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "7")
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    with bounded_state_partitions(spark, 16):
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before

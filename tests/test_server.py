@@ -425,3 +425,137 @@ def test_wire_arrow_middrain_failure_is_loud(srv, monkeypatch):
             resp.read()
     finally:
         conn.close()
+
+
+def test_wire_read_rpcs_run_concurrently(srv, monkeypatch):
+    """Read RPCs share the request lock: two StreamInfo calls are inside
+    the facade at once. Each waits on a two-party barrier, which the
+    second call can only reach if the first one's lock hold admits it."""
+    import threading
+
+    call(srv, "Create", {"uuid": "rr1", "collection": "wire/rr"})
+    barrier = threading.Barrier(2, timeout=10)
+    real = srv.db.stream_info
+
+    def meet(uuid):
+        barrier.wait()
+        return real(uuid)
+
+    monkeypatch.setattr(srv.db, "stream_info", meet)
+    out = [None, None]
+
+    def worker(i: int) -> None:
+        out[i] = call(srv, "StreamInfo", {"uuid": "rr1"})
+
+    threads = [threading.Thread(target=worker, args=(i,)) for i in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=60)
+    assert [o["stat"]["code"] for o in out] == [0, 0], out
+
+
+def test_wire_mutation_excludes_reads_and_is_not_starved(srv, monkeypatch):
+    """A mutating RPC holds the request lock alone — no read is inside the
+    facade while it runs — and it is not starved by reads: 4 threads loop
+    staggered, overlapping StreamInfo calls (so some read nearly always
+    holds the lock), and Create calls still finish promptly, because a
+    waiting writer keeps new readers out."""
+    import threading
+    import time
+
+    call(srv, "Create", {"uuid": "rw1", "collection": "wire/rw"})
+    inside = {"read": 0, "write": 0}
+    overlaps, errs, codes = [], [], []
+    guard = threading.Lock()
+
+    def tracked(kind, fn, hold_s):
+        def run(*a, **k):
+            with guard:
+                inside[kind] += 1
+                if inside["write"] and (inside["read"] or inside["write"] > 1):
+                    overlaps.append(dict(inside))
+            try:
+                time.sleep(hold_s)
+                return fn(*a, **k)
+            finally:
+                with guard:
+                    inside[kind] -= 1
+
+        return run
+
+    monkeypatch.setattr(srv.db, "stream_info",
+                        tracked("read", srv.db.stream_info, 0.3))
+    monkeypatch.setattr(srv.db, "create", tracked("write", srv.db.create, 0.2))
+    stop, written = threading.Event(), threading.Event()
+
+    def reader(i: int) -> None:
+        time.sleep(0.075 * i)
+        while not stop.is_set():
+            try:
+                r = call(srv, "StreamInfo", {"uuid": "rw1"})
+                if r["stat"]["code"] != 0:
+                    errs.append(r["stat"])
+            except Exception as e:  # pragma: no cover - surfaced via errs
+                errs.append(repr(e))
+
+    def writer() -> None:
+        for i in range(3):
+            codes.append(call(srv, "Create", {
+                "uuid": f"rwn{i}", "collection": f"wire/rwn{i}",
+            })["stat"]["code"])
+        written.set()
+
+    readers = [threading.Thread(target=reader, args=(i,)) for i in range(4)]
+    for t in readers:
+        t.start()
+    time.sleep(0.6)  # the readers now overlap continuously
+    w = threading.Thread(target=writer)
+    w.start()
+    finished = written.wait(timeout=20)
+    stop.set()
+    for t in readers + [w]:
+        t.join(timeout=150)
+    assert finished, "mutating RPCs starved behind overlapping reads"
+    assert codes == [0, 0, 0]
+    assert not errs, errs
+    assert not overlaps, overlaps
+
+
+def test_wire_read_planning_runs_no_spark_jobs(spark, tmp_path, monkeypatch):
+    """Planning a read RPC builds plans only; its Spark jobs start with the
+    first page. Covers the two reads that used to sample parquet footers
+    while planning: RawValues over a stream with a tombstone, and
+    AlignedWindows served from the ladder (level selection and level
+    scan). Checked by job group on the status tracker."""
+    db = BTrDB(spark, str(tmp_path / "plan"), rollup_levels=[4])
+    db.create("pz", "wire/p")
+    db.insert("pz", [(t, float(t % 5)) for t in range(0, 256, 2)])
+    db.delete("pz", 64, 96)
+    served = []
+    real_serve = db.ladder.serve_aligned
+    monkeypatch.setattr(db.ladder, "serve_aligned",
+                        lambda *a: served.append(a) or real_serve(*a))
+    srv = BTrDBHttpServer(db).start()
+    sc = spark.sparkContext
+    group = "wire-plan-probe"
+    try:
+        sc.setJobGroup(group, "read planning only")
+        try:
+            raw = srv.rpc_RawValues({"uuid": "pz", "start": 0, "end": 256})
+            aw = srv.rpc_AlignedWindows(
+                {"uuid": "pz", "start": 0, "end": 256, "pointWidth": 5}
+            )
+            jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert jobs == []
+        assert len(served) == 1
+        kept = [t for t in range(0, 256, 2) if not 64 <= t < 96]
+        raw_vals = [v for p in raw for v in json.loads(p)["values"]]
+        assert [v["time"] for v in raw_vals] == kept
+        aw_vals = [v for p in aw for v in json.loads(p)["values"]]
+        assert sum(v["count"] for v in aw_vals) == len(kept)
+        assert 64 not in {v["time"] for v in aw_vals}
+    finally:
+        srv.stop()

@@ -657,3 +657,38 @@ def test_compact_migrates_legacy_retired_dir_key(spark, tmp_path):
         (1, 1.0),
         (2, 2.0),
     ]
+
+
+def test_reads_pin_one_manifest_snapshot(spark, tmp_path, monkeypatch):
+    """A read plans against ONE manifest snapshot. A writer in the same
+    process can commit an insert and a compaction between two manifest
+    reads; a read that took its version from the old manifest and its
+    generation from the new one would filter ins_ver <= v against a base
+    written at v+1 and silently answer nothing. Reproduced by serving the
+    pre-commit manifest to the read's first manifest read only."""
+    from btrdb_server_spark.store import PointStore
+
+    store = PointStore(spark, str(tmp_path / "snap"))
+    store.insert("a", [(t, float(t)) for t in range(10)])  # v1
+    before = store._read_manifest()
+    store.insert("a", [(t, 1.0) for t in range(100, 105)])  # v2
+    store.compact()  # new generation, base at ins_ver=2
+    real = PointStore._read_manifest
+
+    def first_read_is_stale(self):
+        first_read_is_stale.calls += 1
+        return dict(before) if first_read_is_stale.calls == 1 else real(self)
+
+    def plan(read):
+        first_read_is_stale.calls = 0
+        monkeypatch.setattr(PointStore, "_read_manifest", first_read_is_stale)
+        try:
+            return read()
+        finally:
+            monkeypatch.setattr(PointStore, "_read_manifest", real)
+
+    for read in (store.points_at, lambda: store.stream_points("a")):
+        rows = plan(read).collect()
+        assert sorted(r.time for r in rows) == list(range(10))
+    ranges = plan(lambda: store.changes("a", 0, 1, 0)).collect()
+    assert [(r.start, r.end) for r in ranges] == [(0, 10)]
