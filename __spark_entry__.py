@@ -5932,9 +5932,8 @@ def q_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     return winnowing_fingerprints(load_table(spark, sf_dir, "documents"))
 
 
-# The driver checks the FIRST 50 queries() entries each round; this
-# constant IS that window. scripts/rotate_window.py regenerates it each
-# round; tests/test_window.py pins dict order to it.
+# The external driver checks the FIRST 50 queries() entries; this fixed
+# constant IS that window, and tests/test_window.py pins dict order to it.
 DRIVER_WINDOW: list[str] = [
     "csv_export",
     "nearest_asof",
@@ -5991,26 +5990,15 @@ DRIVER_WINDOW: list[str] = [
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Dict order is deliberate: the external driver checks the FIRST 50
-    entries each round, so coverage rotates. The authoritative window is
-    the module constant DRIVER_WINDOW (exactly 50 names, pinned by
-    tests/test_window.py so the window math can never silently drift).
-
-    Standing rotation policy (mechanized by scripts/rotate_window.py; no
-    counts here on purpose — prose tallies drift, tools/rotation_ledger.py
-    is the authoritative per-entry status):
-    - 4 slots per round re-validate the oldest-banked SURVEY section-2
-      anchors.
-    - the remaining 46 slots burn down the never-driver-checked backlog,
-      PRIORITY entries first (semantically novel ops), then oldest
-      registrations.
-    - entries past position 50 are banked green from earlier rounds or
-      verified bit-exact against their DuckDB oracle locally via
-      scripts/check_driver.py (the driver-replica compare), recorded in
-      tools/local_verified.json.
+    entries. That window is the fixed module constant DRIVER_WINDOW
+    (exactly 50 names, pinned by tests/test_window.py). Correctness
+    evidence for every entry, inside the window or not, is tier-1's oracle
+    gate: tests/test_oracle_parity.py runs each entry bit-exact against its
+    oracle_sql() twin on a plain session on every run.
     """
     return {
-        # ---- DRIVER WINDOW: positions 1-50 (driver checks first 50;
-        # regenerated by scripts/rotate_window.py) ----
+        # ---- DRIVER WINDOW: positions 1-50 (the driver checks first 50;
+        # pinned to DRIVER_WINDOW) ----
         "csv_export": q_csv_export,
         "nearest_asof": q_nearest_asof,
         "changed_ranges": q_changed_ranges,
@@ -6061,7 +6049,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "embedding_near_dups": q_embedding_near_dups,
         "ivf_assign": q_ivf_assign,
         "ivf_refine": q_ivf_refine,
-        # ---- position 51+: banked green or locally verified ----
+        # ---- position 51+: outside the driver window ----
         "store_version_travel": q_store_version_travel,
         "list_collections": q_list_collections,
         "windows_depth": q_windows_depth,

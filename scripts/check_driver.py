@@ -1,30 +1,50 @@
-"""Local replica of the driver's correctness harness.
+"""The oracle gate: every `queries()` entry against its `oracle_sql()` twin.
 
-Runs every `queries()` entry on a PLAIN SparkSession (deliberately built
-without any of this repo's session config — exactly like the driver's own
-harness) and compares against `oracle_sql()` run in DuckDB at the same sf.
+Each entry runs on a PLAIN SparkSession (none of this repo's SQL config;
+see `plain_session`) and is compared with its DuckDB oracle at the same
+sf through `compare`, which `tests/test_oracle_parity.py` also uses, so
+tier-1 and this CLI apply one canonicalizer and one comparison.
 
-Usage: python scripts/check_driver.py [--approx] [sf_dir] [query ...]
-
-Floats are compared BIT-EXACT by default (struct.pack of the double — the
-same class of comparison as the driver's value hash, so a sub-1e-9
-association-order difference that would fail at the driver fails here too).
-Pass --approx for the older 9-significant-digit tolerant compare.
+Usage: python scripts/check_driver.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
 import math
+import os
 import struct
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
-def canon(rows, cols, strict=True):
+def plain_session(spark):
+    """A new session of `spark`'s context with every modifiable spark.sql.*
+    key from the context conf unset, then shuffle.partitions=8. A harness
+    must not inherit the repo's session config (nanosAsLong, timeZone,
+    Arrow): the driver's own session carries none of it. Keys PySpark sets
+    in every context stay: unsetting spark.sql.artifact.isolation.enabled
+    moves Python UDF workers into a directory the package cannot be
+    imported from."""
+    from pyspark.core.context import DEFAULT_CONFIGS
+
+    plain = spark.newSession()
+    for key, _ in spark.sparkContext.getConf().getAll():
+        if (key.startswith("spark.sql.") and key not in DEFAULT_CONFIGS
+                and plain.conf.isModifiable(key)):
+            plain.conf.unset(key)
+    plain.conf.set("spark.sql.shuffle.partitions", "8")
+    return plain
+
+
+def canon(rows, cols):
     """Canonicalize a result set: columns sorted by name, rows sorted.
-    strict=True (default): floats compared by bit pattern, like the
-    driver's value hash. strict=False: rounded to 9 significant digits."""
+
+    Floats compare by bit pattern (struct.pack of the double), like the
+    driver's value hash, with two exceptions: every NaN equals every NaN,
+    and -0.0 equals 0.0. Integers stay Python ints, so int64 values that
+    differ below float precision stay distinct."""
     order = sorted(range(len(cols)), key=lambda i: cols[i])
 
     def norm(v):
@@ -35,9 +55,7 @@ def canon(rows, cols, strict=True):
                 return "nan"
             if v == 0:
                 return 0.0
-            if strict:
-                return struct.pack("<d", v).hex()
-            return round(v, 9 - 1 - int(math.floor(math.log10(abs(v)))) if abs(v) > 1e-300 else 9)
+            return struct.pack("<d", v).hex()
         if isinstance(v, (list, tuple)):
             return tuple(norm(x) for x in v)
         if isinstance(v, dict):
@@ -51,42 +69,75 @@ def canon(rows, cols, strict=True):
     return [cols[i] for i in order], out
 
 
-def main() -> int:
+def compare(cols, rows, con, sql) -> str | None:
+    """Compare a Spark result (column names, row tuples) with the oracle
+    `sql` run on DuckDB connection `con`. Returns None when they match,
+    else a one-line reason.
+
+    Type audit first: DuckDB types sum(BIGINT) as HUGEINT, which the
+    driver's Arrow/pandas fetch coerces to float64 — the value hash then
+    mismatches Spark's int64 even when every value is identical (root cause
+    of the r02-r04 windows_depth / windows_rollup / repetition_stats reds).
+    fetchall() returns Python ints either way, so without this check the
+    mismatch is invisible. Fix in the oracle: CAST(... AS BIGINT)."""
+    rel = con.sql(sql)
+    huge = [c for c, t in zip(rel.columns, rel.types) if str(t) in ("HUGEINT", "UHUGEINT")]
+    if huge:
+        return (f"HUGEINT output column(s) {huge} — driver coerces to float64; "
+                f"CAST to BIGINT in oracle")
+    scols, srows = canon(rows, cols)
+    ocols, orows = canon(rel.fetchall(), rel.columns)
+    if scols != ocols:
+        return f"schema {scols} != {ocols}"
+    if len(srows) != len(orows):
+        return f"rows {len(srows)} != {len(orows)}"
+    if srows != orows:
+        bad = next(i for i, (a, b) in enumerate(zip(srows, orows)) if a != b)
+        return f"values differ at sorted row {bad}: spark {srows[bad]} oracle {orows[bad]}"
+    return None
+
+
+def oracle_connection(sf_dir):
     import duckdb
+
+    from btrdb_server_spark.sources.testdata import TABLES
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+    return con
+
+
+def main() -> int:
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entry
 
-    args = [a for a in sys.argv[1:] if a != "--approx"]
-    strict = "--approx" not in sys.argv[1:]
+    args = sys.argv[1:]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
 
-    # Plain session: mimic the driver (no repo-side config allowed to matter).
-    spark = (
+    # Python UDF workers import the package too: point them at this checkout.
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+    )
+    spark = plain_session(
         SparkSession.builder.master("local[8]")
         .appName("check-driver")
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.shuffle.partitions", "8")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events documents embeddings"
-    ).split():
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+    con = oracle_connection(sf_dir)
 
     if not only:
         # t1 smoke: entry() must run on sf0.001 with a stable schema.
         smoke = entry.entry(spark)
         print(f"entry(): rows={smoke.count()} cols={smoke.columns}")
 
-    qs = entry.queries()
     oracles = entry.oracle_sql()
     n_pass = n_fail = n_err = 0
-    for name, fn in qs.items():
+    for name, fn in entry.queries().items():
         if only and name not in only:
             continue
         try:
@@ -103,44 +154,16 @@ def main() -> int:
             n_pass += 1
             continue
         try:
-            # Type audit first: DuckDB types sum(BIGINT) as HUGEINT, which
-            # the driver's Arrow/pandas fetch coerces to float64 — the value
-            # hash then mismatches Spark's int64 even when every value is
-            # identical (root cause of the r02-r04 windows_depth /
-            # windows_rollup / repetition_stats reds). fetchall() returns
-            # Python ints either way, so without this check the replica
-            # can't see the mismatch. Fix in the oracle: CAST(... AS BIGINT).
-            rel = con.sql(sql)
-            huge = [c for c, t in zip(rel.columns, rel.types)
-                    if str(t) in ("HUGEINT", "UHUGEINT")]
-            if huge:
-                print(f"FAIL {name}: HUGEINT output column(s) {huge} — "
-                      f"driver coerces to float64; CAST to BIGINT in oracle")
-                n_fail += 1
-                continue
-            cur = con.execute(sql)
-            ocols = [d[0] for d in cur.description]
-            orows = cur.fetchall()
+            reason = compare(cols, rows, con, sql)
         except Exception as e:  # noqa: BLE001
             print(f"ERR  {name} (oracle): {str(e).splitlines()[0][:160]}")
             n_err += 1
             continue
-        scols, srows = canon(rows, cols, strict)
-        ocols2, orows2 = canon(orows, ocols, strict)
-        if scols != ocols2:
-            print(f"FAIL {name}: schema {scols} != {ocols2}")
-            n_fail += 1
-        elif len(srows) != len(orows2):
-            print(f"FAIL {name}: rows {len(srows)} != {len(orows2)}")
-            n_fail += 1
-        elif srows != orows2:
-            bad = next(i for i, (a, b) in enumerate(zip(srows, orows2)) if a != b)
-            print(f"FAIL {name}: values differ at sorted row {bad}:")
-            print(f"     spark:  {srows[bad]}")
-            print(f"     oracle: {orows2[bad]}")
+        if reason:
+            print(f"FAIL {name}: {reason}")
             n_fail += 1
         else:
-            print(f"PASS {name}: rows={len(srows)}")
+            print(f"PASS {name}: rows={len(rows)}")
             n_pass += 1
     print(f"\n== pass={n_pass} fail={n_fail} err={n_err}")
     return 1 if (n_fail or n_err) else 0

@@ -1,7 +1,7 @@
-"""Mimic the driver's correctness gate: run every queries() entry and its
-oracle_sql() twin at sf0.01, compare row count, schema width, and exact
-values (columns sorted by name, rows sorted) — a stricter local version of
-the value-hash check."""
+"""The oracle gate: every queries() entry against its oracle_sql() twin at
+sf0.01, on a plain session, through the same `compare` that
+scripts/check_driver.py uses — bit-exact floats, the HUGEINT audit,
+columns and rows sorted."""
 
 from __future__ import annotations
 
@@ -10,62 +10,83 @@ import pandas as pd
 import pytest
 
 import __spark_entry__ as entry_mod
+from scripts.check_driver import compare, oracle_connection, plain_session
 
 SF_DIR = "/root/testdata/sf0.01"
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
+
+
+@pytest.fixture(scope="module")
+def plain_spark(spark):
+    return plain_session(spark)
 
 
 @pytest.fixture(scope="module")
 def ddb():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-    return con
+    return oracle_connection(SF_DIR)
 
 
-def normalize(df: pd.DataFrame) -> pd.DataFrame:
-    df = df.reindex(sorted(df.columns), axis=1)
-    df = df.sort_values(by=list(df.columns), ignore_index=True)
-    return df
+def _result(df):
+    return df.columns, [tuple(r) for r in df.collect()]
 
 
 @pytest.mark.parametrize("name", sorted(entry_mod.queries().keys()))
-def test_query_matches_oracle(spark, ddb, name):
+def test_query_matches_oracle(plain_spark, ddb, name):
     oracles = entry_mod.oracle_sql()
     if name not in oracles:
         pytest.skip("rows-only query (no SQL oracle declared)")
-    got = entry_mod.queries()[name](spark, SF_DIR).toPandas()
-    want = ddb.execute(oracles[name]).df()
-    assert len(got) == len(want), f"{name}: rows {len(got)} != {len(want)}"
-    assert sorted(got.columns) == sorted(want.columns), f"{name}: columns differ"
-    g, w = normalize(got), normalize(want)
-    for col in g.columns:
-        gc, wc = g[col], w[col]
-        if gc.dtype.kind == "f" or wc.dtype.kind == "f":
-            pd.testing.assert_series_equal(
-                gc.astype(float), wc.astype(float), check_names=False, rtol=0, atol=0
-            )
-        else:
-            assert gc.fillna(-1).tolist() == wc.fillna(-1).tolist(), f"{name}.{col}"
+    cols, rows = _result(entry_mod.queries()[name](plain_spark, SF_DIR))
+    reason = compare(cols, rows, ddb, oracles[name])
+    assert reason is None, f"{name}: {reason}"
 
 
-def test_entry_smoke(spark):
-    df = entry_mod.entry(spark)
+def test_entry_smoke(plain_spark):
+    df = entry_mod.entry(plain_spark)
     assert df.count() > 0
     assert len(df.schema) >= 2
 
 
-def test_media_features_oracle_is_byte_based_on_non_ascii(spark):
+def test_plain_session_carries_no_repo_sql_conf(spark, plain_spark):
+    """The gate's session inherits none of get_spark's SQL config: a
+    harness that inherits e.g. nanosAsLong hides a loader that fails on
+    the driver's own session."""
+    for key in ("spark.sql.legacy.parquet.nanosAsLong", "spark.sql.session.timeZone"):
+        assert spark.conf.get(key, None) is not None
+        assert plain_spark.conf.get(key, None) is None, key
+    assert plain_spark.conf.get("spark.sql.shuffle.partitions") == "8"
+
+
+def test_compare_rejects_hugeint_oracle_column():
+    """DuckDB types sum(BIGINT) as HUGEINT; the driver reads it as float64,
+    so the oracle must CAST it even when the values match."""
+    con = duckdb.connect()
+    huge = "SELECT sum(x) AS s FROM (VALUES (1::BIGINT)) t(x)"
+    assert "HUGEINT" in compare(["s"], [(1,)], con, huge)
+    cast = "SELECT CAST(sum(x) AS BIGINT) AS s FROM (VALUES (1::BIGINT)) t(x)"
+    assert compare(["s"], [(1,)], con, cast) is None
+
+
+def test_compare_keeps_int64_exact_next_to_null():
+    """A BIGINT column holding a NULL must not pass through float64, where
+    2^53+1 reads as 2^53."""
+    con = duckdb.connect()
+    sql = "SELECT * FROM (VALUES (9007199254740993::BIGINT), (NULL)) t(x)"
+    assert compare(["x"], [(2**53,), (None,)], con, sql) is not None
+    assert compare(["x"], [(2**53 + 1,), (None,)], con, sql) is None
+
+
+def test_compare_floats_bit_exact_with_nan_and_signed_zero():
+    """Floats compare by bit pattern, except NaN == NaN and -0.0 == 0.0."""
+    con = duckdb.connect()
+    sql = "SELECT * FROM (VALUES ('NaN'::DOUBLE), (0.0::DOUBLE)) t(x)"
+    assert compare(["x"], [(float("nan"),), (-0.0,)], con, sql) is None
+    assert compare(["x"], [(0.1 + 0.2,)], con, "SELECT 0.3::DOUBLE AS x") is not None
+
+
+def test_media_features_oracle_is_byte_based_on_non_ascii(plain_spark):
     """The media_features oracle must agree with the Spark UTF-8 byte path
     on MULTIBYTE text, not just the ASCII fixture corpus — the r7 oracle
     iterated characters (ord over split(text,'')) and only agreed because
     the documents fixture is pure ASCII."""
-    import duckdb
-
     from btrdb_server_spark.functions.multimodal import (
         media_features,
         media_from_documents,
@@ -78,22 +99,10 @@ def test_media_features_oracle_is_byte_based_on_non_ascii(spark):
         (3, ""),                      # empty payload
         (4, "plain ascii"),
     ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    got = (
-        media_features(media_from_documents(docs))
-        .orderBy("media_id")
-        .toPandas()
-    )
+    docs = plain_spark.createDataFrame(rows, "doc_id long, text string")
+    cols, got = _result(media_features(media_from_documents(docs)))
     con = duckdb.connect()
     con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text"]))
-    want = con.execute(entry_mod.oracle_sql()["media_features"]).df()
-    g, w = normalize(got), normalize(want)
-    assert len(g) == len(w) == 5
-    for col in g.columns:
-        gc, wc = g[col], w[col]
-        if gc.dtype.kind == "f" or wc.dtype.kind == "f":
-            pd.testing.assert_series_equal(
-                gc.astype(float), wc.astype(float), check_names=False, rtol=0, atol=0
-            )
-        else:
-            assert gc.fillna(-1).tolist() == wc.fillna(-1).tolist(), col
+    assert len(got) == 5
+    reason = compare(cols, got, con, entry_mod.oracle_sql()["media_features"])
+    assert reason is None, reason

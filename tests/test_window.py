@@ -1,13 +1,13 @@
-"""Pin the driver rotation window so it can never silently drift again.
+"""Pin the driver window and the registry's oracle coverage.
 
-Round 6 post-mortem: the external driver checks exactly the FIRST 50
-entries of ``queries()``.  In round 6 a duplicate dict key plus an
-off-by-N docstring put 73 entries ahead of the "position 51+" marker, so
-23 entries the rotation plan believed were being checked silently fell
-outside the window.  These tests make that class of error a hard pytest
-failure: the window is a module constant (DRIVER_WINDOW), the dict literal is
-AST-checked for duplicate keys, and the first-50 slice must equal the
-constant exactly.
+The external driver checks exactly the FIRST 50 entries of ``queries()``.
+In round 6 a duplicate dict key plus an off-by-N docstring put 73 entries
+ahead of the "position 51+" marker, so 23 entries believed checked fell
+outside the window. The window is a fixed module constant
+(DRIVER_WINDOW); these tests AST-check the dict literal for duplicate
+keys and require the first-50 slice to equal the constant exactly.
+Correctness evidence for every entry is tier-1's oracle gate
+(tests/test_oracle_parity.py), not the window.
 """
 
 from __future__ import annotations
@@ -52,20 +52,6 @@ def test_window_names_are_unique_and_registered():
     assert not missing, missing
 
 
-def test_rotation_ledger_has_no_gaps():
-    """Every queries() entry must carry evidence: a banked green driver
-    row, membership in the current 50-slot window (locally verified), or
-    a bit-exact local check recorded in tools/local_verified.json.  This
-    is the executable form of the rotation bookkeeping that silently
-    drifted in round 6."""
-    import importlib
-
-    ledger_mod = importlib.import_module("tools.rotation_ledger")
-    out = ledger_mod.build_ledger()
-    assert len(out["entries"]) == len(entry_mod.queries())
-    assert not out["problems"], "\n".join(out["problems"])
-
-
 def test_survey_operator_inventory_matches_registry():
     """SURVEY.md section 2 must name every registered driver entry and
     claim nothing unregistered (the judge reads section 2 line by line)."""
@@ -92,17 +78,3 @@ def test_every_query_has_an_oracle_or_documented_exemption():
     uncovered = qs - oracles - exempt
     assert not uncovered, f"queries without oracle or exemption: {uncovered}"
 
-
-def test_impl_drift_extracts_last_top_level_def():
-    """_extract_fn must see a function that is the LAST top-level def in
-    the file (no following top-level statement): before the \\Z
-    alternative in the lookahead, such a function extracted as None on
-    both the old and new source and its body changes were invisible to
-    the banked-then-changed staleness check."""
-    from tools.impl_drift import _extract_fn
-
-    src = "def a():\n    return 1\n\n\ndef z_last():\n    return 2\n"
-    got = _extract_fn(src, "z_last")
-    assert got is not None and "return 2" in got
-    changed = src.replace("return 2", "return 3")
-    assert _extract_fn(changed, "z_last") != got
