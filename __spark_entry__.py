@@ -147,6 +147,42 @@ def _write_time_slices(
             _os.utime(dst, (base + i, base + i))
     _shutil.rmtree(tmp, ignore_errors=True)
 
+
+def _run_stream(
+    spark: SparkSession, df: DataFrame, name: str, parts: int | None = None
+) -> DataFrame:
+    """Drain a streaming query into the memory table `name` and return that
+    table: update mode, its own checkpoint, processAllAvailable, stop. The
+    state partition count is `parts` (see bounded_state_partitions)."""
+    ckpt = _workdir(prefix=f"btrdb_{name}_") + "/ckpt"
+    with bounded_state_partitions(spark, parts):
+        q = (
+            df.writeStream.outputMode("update")
+            .format("memory")
+            .queryName(name)
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+    return spark.sql(f"SELECT * FROM {name}")
+
+
+def _final_emission(out: DataFrame, keys: list, *order) -> DataFrame:
+    """Update mode re-emits a key each time its state changes: keep, per
+    key, the one emission that `order` ranks first (the final state)."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy(*keys).orderBy(*order)
+    return (
+        out.withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") == 1)
+        .drop("rn")
+    )
+
+
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: per-stream aligned statistical rollup over sf0.001."""
     pts = load_points(spark, "/root/testdata/sf0.001")
@@ -716,7 +752,7 @@ def q_streaming_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     from btrdb_server_spark.streaming.stateful import streaming_ewma
 
     work = _workdir(prefix="btrdb_sewma_q_")
-    src_d, ckpt = f"{work}/src", f"{work}/ckpt"
+    src_d = f"{work}/src"
     pts = load_points(spark, sf_dir, T_2024, T_JAN10).where(
         F.col("uuid").isin("purchase", "error")
     )
@@ -729,21 +765,8 @@ def q_streaming_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(src_d)
     )
-    name = "stream_ewma_out"
-    with bounded_state_partitions(spark):
-        q = (
-            streaming_ewma(stream, alpha=0.25)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.sql(f"SELECT * FROM {name}").orderBy("uuid", "time")
+    out = _run_stream(spark, streaming_ewma(stream, alpha=0.25), "stream_ewma_out")
+    return out.orderBy("uuid", "time")
 
 
 def q_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -841,7 +864,7 @@ def q_streaming_deadband(spark: SparkSession, sf_dir: str) -> DataFrame:
     from btrdb_server_spark.streaming.stateful import streaming_deadband
 
     work = _workdir(prefix="btrdb_sdb_q_")
-    src_d, ckpt = f"{work}/src", f"{work}/ckpt"
+    src_d = f"{work}/src"
     pts = load_points(spark, sf_dir, T_2024, T_JAN10).where(
         F.col("uuid") == "view"
     )
@@ -851,21 +874,10 @@ def q_streaming_deadband(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(src_d)
     )
-    name = "stream_deadband_out"
-    with bounded_state_partitions(spark):
-        q = (
-            streaming_deadband(stream, deadband=50.0)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.sql(f"SELECT time, value FROM {name}").orderBy("time")
+    out = _run_stream(
+        spark, streaming_deadband(stream, deadband=50.0), "stream_deadband_out"
+    )
+    return out.drop("uuid").orderBy("time")
 
 
 def q_streaming_sdt(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -877,7 +889,7 @@ def q_streaming_sdt(spark: SparkSession, sf_dir: str) -> DataFrame:
     from btrdb_server_spark.streaming.stateful import streaming_sdt
 
     work = _workdir(prefix="btrdb_sdt_q_")
-    src_d, ckpt = f"{work}/src", f"{work}/ckpt"
+    src_d = f"{work}/src"
     pts = load_points(spark, sf_dir, T_2024, T_JAN10).where(
         F.col("uuid") == "view"
     )
@@ -887,21 +899,8 @@ def q_streaming_sdt(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(src_d)
     )
-    name = "stream_sdt_out"
-    with bounded_state_partitions(spark):
-        q = (
-            streaming_sdt(stream, tolerance=2.0)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.sql(f"SELECT time, value FROM {name}").orderBy("time")
+    out = _run_stream(spark, streaming_sdt(stream, tolerance=2.0), "stream_sdt_out")
+    return out.drop("uuid").orderBy("time")
 
 
 def q_streaming_crossings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -913,7 +912,7 @@ def q_streaming_crossings(spark: SparkSession, sf_dir: str) -> DataFrame:
     from btrdb_server_spark.streaming.stateful import streaming_crossings
 
     work = _workdir(prefix="btrdb_cross_q_")
-    src_d, ckpt = f"{work}/src", f"{work}/ckpt"
+    src_d = f"{work}/src"
     pts = load_points(spark, sf_dir, T_2024, T_JAN10).where(
         F.col("uuid") == "click"
     )
@@ -923,23 +922,10 @@ def q_streaming_crossings(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(src_d)
     )
-    name = "stream_cross_out"
-    with bounded_state_partitions(spark):
-        q = (
-            streaming_crossings(stream, threshold=10.0)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.sql(
-        f"SELECT time, value, prev_time, prev_value, direction FROM {name}"
-    ).orderBy("time", "value")
+    out = _run_stream(
+        spark, streaming_crossings(stream, threshold=10.0), "stream_cross_out"
+    )
+    return out.drop("uuid").orderBy("time", "value")
 
 
 def q_diurnal_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1086,7 +1072,7 @@ def q_streaming_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     from btrdb_server_spark.streaming.stateful import streaming_attribution
 
     work = _workdir(prefix="btrdb_attr_q_")
-    src_d, ckpt = f"{work}/src", f"{work}/ckpt"
+    src_d = f"{work}/src"
     ev = load_table(spark, sf_dir, "events")
     ev = ev.select(
         "event_id",
@@ -1104,24 +1090,10 @@ def q_streaming_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(src_d)
     )
-    name = "stream_attr_out"
-    with bounded_state_partitions(spark):
-        q = (
-            streaming_attribution(stream, within=DAY_NS)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.sql(
-        f"SELECT event_id, conv_time, touch_event_id, touch_type, "
-        f"touch_time, latency FROM {name}"
-    ).orderBy("event_id")
+    out = _run_stream(
+        spark, streaming_attribution(stream, within=DAY_NS), "stream_attr_out"
+    )
+    return out.orderBy("event_id")
 
 
 def q_synthesize_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1459,7 +1431,7 @@ def q_streaming_stat_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     from btrdb_server_spark.streaming.stateful import streaming_stat_windows
 
     work = _workdir(prefix="btrdb_stream_q_")
-    src, ckpt = f"{work}/src", f"{work}/ckpt"
+    src = f"{work}/src"
     # repartition, not coalesce: the loader hands back ONE partition and
     # coalesce cannot increase it — four real files + maxFilesPerTrigger=2
     # gives two genuine micro-batches.
@@ -1469,39 +1441,23 @@ def q_streaming_stat_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 2)
         .parquet(src)
     )
-    name = "stat_state_out"
     # ~3k (uuid, bucket) state keys: 16 partitions measured 4.0 s vs 6.5 s
     # at the 4-partition default (interleaved best-of-2, sf0.1). The env
     # knob still overrides for production sizing.
-    with bounded_state_partitions(spark, 16):
-        q = (
-            streaming_stat_windows(stream, 42, value_quantum=0.01)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    out = _run_stream(
+        spark,
+        streaming_stat_windows(stream, 42, value_quantum=0.01),
+        "stat_state_out",
+        16,
+    )
     # Multiple emissions per bucket across micro-batches: keep the final one
-    # (max cnt — the accumulator only grows).
-    out = spark.sql(f"SELECT * FROM {name}")
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("uuid", "bucket").orderBy(F.col("cnt").desc())
-    return (
-        out.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        # no 6-digit rounding: the quantized int64 sum makes the mean the
-        # SAME double on both sides (float(int) exact, * 0.01, / cnt — one
-        # IEEE sequence), and a decimal round would only reintroduce the
-        # Spark-HALF_UP vs DuckDB tie hazard on the exact .5s the
-        # quantization produces
-        .select("uuid", "bucket", "vmin", "vmean", "vmax", "cnt")
-        .orderBy("uuid", "bucket")
+    # (max cnt — the accumulator only grows). No 6-digit rounding: the
+    # quantized int64 sum makes the mean the SAME double on both sides
+    # (float(int) exact, * 0.01, / cnt — one IEEE sequence), and a decimal
+    # round would only reintroduce the Spark-HALF_UP vs DuckDB tie hazard on
+    # the exact .5s the quantization produces.
+    return _final_emission(out, ["uuid", "bucket"], F.col("cnt").desc()).orderBy(
+        "uuid", "bucket"
     )
 
 
@@ -1520,7 +1476,7 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     is semantic (a duplicate is a duplicate forever), matching ST2."""
 
     work = _workdir(prefix="btrdb_sdedup_q_")
-    src_d, ckpt = f"{work}/src", f"{work}/ckpt"
+    src_d = f"{work}/src"
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     # repartition, not coalesce: the loader may hand back ONE partition and
     # coalesce cannot increase the count — that silently collapses the
@@ -1539,33 +1495,12 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_copies"),
         )
     )
-    name = "stream_dedup_out"
-    with bounded_state_partitions(spark):
-        q = (
-            agg.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    out = spark.sql(f"SELECT * FROM {name}")
-    from pyspark.sql import Window
-
-    # Update mode re-emits a group whenever it changes: the final state is
-    # the emission with the highest copy count (ties: lowest keeper).
-    w = Window.partitionBy("h").orderBy(
-        F.col("n_copies").desc(), F.col("keeper_id")
-    )
-    return (
-        out.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("h", "keeper_id", "n_copies")
-        .orderBy("h")
-    )
+    out = _run_stream(spark, agg, "stream_dedup_out")
+    # The final state is the emission with the highest copy count (ties:
+    # lowest keeper).
+    return _final_emission(
+        out, ["h"], F.col("n_copies").desc(), F.col("keeper_id")
+    ).orderBy("h")
 
 
 def q_streaming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1582,7 +1517,7 @@ def q_streaming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from btrdb_server_spark.streaming.stateful import streaming_heavy_hitters
 
     work = _workdir(prefix="btrdb_stopk_q_")
-    src_d, ckpt = f"{work}/src", f"{work}/ckpt"
+    src_d = f"{work}/src"
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     # repartition, not coalesce: the loader may hand back ONE partition and
     # coalesce cannot increase the count — that silently collapses the
@@ -1595,28 +1530,11 @@ def q_streaming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     toks = stream.select(F.explode(tokens_col(F.col("text"))).alias("token"))
     hh = streaming_heavy_hitters(toks, num_shards=8, capacity=65536)
-    name = "stream_topk_out"
-    with bounded_state_partitions(spark):
-        q = (
-            hh.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    out = spark.sql(f"SELECT * FROM {name}")
-    from pyspark.sql import Window
-
+    out = _run_stream(spark, hh, "stream_topk_out")
     # Counts are monotone per surviving token: final state = max-cnt
-    # emission per (shard, token), same fold as q_streaming_dedup.
-    w = Window.partitionBy("shard", "token").orderBy(F.col("cnt").desc())
+    # emission per (shard, token).
     return (
-        out.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
+        _final_emission(out, ["shard", "token"], F.col("cnt").desc())
         .select("token", "cnt", "overcount")
         .orderBy(F.col("cnt").desc(), "token")
         .limit(50)
@@ -1635,7 +1553,7 @@ def q_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from btrdb_server_spark.streaming.stateful import streaming_sessionize
 
     work = _workdir(prefix="btrdb_ssess_q_")
-    src_d, ckpt = f"{work}/src", f"{work}/ckpt"
+    src_d = f"{work}/src"
     pts = load_points(spark, sf_dir, T_2024, T_FEB)
     # Unsorted repartition (round-robin — the loader hands back ONE
     # partition, which coalesce cannot increase): files slice the history
@@ -1648,20 +1566,7 @@ def q_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(src_d)
     )
     sess = streaming_sessionize(stream, gap=3_600_000_000_000)
-    name = "stream_sessions_out"
-    with bounded_state_partitions(spark):
-        q = (
-            sess.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    out = spark.sql(f"SELECT * FROM {name}")
+    out = _run_stream(spark, sess, "stream_sessions_out")
     from pyspark.sql import Window
 
     snap = out.withColumn(
@@ -2271,7 +2176,7 @@ def q_streaming_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from btrdb_server_spark.streaming.stateful import streaming_lsh_candidates
 
     work = _workdir(prefix="btrdb_slsh_q_")
-    src_d, ckpt = f"{work}/src", f"{work}/ckpt"
+    src_d = f"{work}/src"
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     # repartition, not coalesce: the loader may hand back ONE partition and
     # coalesce cannot increase the count — that silently collapses the
@@ -2283,24 +2188,11 @@ def q_streaming_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(src_d)
     )
     cand = streaming_lsh_candidates(stream)
-    name = "stream_lsh_out"
     # 32 band-space shards: 8 partitions measured best (7.2/7.0 s vs 9.0 s
     # @4, interleaved warm reps, sf0.1); beyond 8 the per-batch state-store
     # fixed costs eat the parallelism.
-    with bounded_state_partitions(spark, 8):
-        q = (
-            cand.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
     return (
-        spark.sql(f"SELECT * FROM {name}")
+        _run_stream(spark, cand, "stream_lsh_out", 8)
         .distinct()  # a pair colliding in several bands/batches emits once
         .orderBy("a", "b")
     )
@@ -3488,7 +3380,7 @@ def q_streaming_twa(spark: SparkSession, sf_dir: str) -> DataFrame:
     from btrdb_server_spark.streaming.stateful import streaming_twa
 
     work = _workdir(prefix="btrdb_stwa_q_")
-    src_d, ckpt = f"{work}/src", f"{work}/ckpt"
+    src_d = f"{work}/src"
     pts = load_points(spark, sf_dir, T_2024, T_JAN10).where(
         F.col("uuid").isin("purchase", "error")
     )
@@ -3498,21 +3390,8 @@ def q_streaming_twa(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(src_d)
     )
-    name = "stream_twa_out"
-    with bounded_state_partitions(spark):
-        q = (
-            streaming_twa(stream, T_2024, DAY_NS)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.sql(f"SELECT * FROM {name}").orderBy("uuid", "time")
+    out = _run_stream(spark, streaming_twa(stream, T_2024, DAY_NS), "stream_twa_out")
+    return out.orderBy("uuid", "time")
 
 
 def q_streaming_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3525,7 +3404,7 @@ def q_streaming_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from btrdb_server_spark.streaming.stateful import streaming_quantile
 
     work = _workdir(prefix="btrdb_squant_q_")
-    src_d, ckpt = f"{work}/src", f"{work}/ckpt"
+    src_d = f"{work}/src"
     pts = load_points(spark, sf_dir, T_2024, T_JAN10).where(
         F.col("uuid").isin("purchase", "error")
     )
@@ -3535,21 +3414,10 @@ def q_streaming_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(src_d)
     )
-    name = "stream_quantile_out"
-    with bounded_state_partitions(spark):
-        q = (
-            streaming_quantile(stream, T_2024, DAY_NS)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.sql(f"SELECT * FROM {name}").orderBy("uuid", "time")
+    out = _run_stream(
+        spark, streaming_quantile(stream, T_2024, DAY_NS), "stream_quantile_out"
+    )
+    return out.orderBy("uuid", "time")
 
 
 def _streaming_quantile_oracle_sql() -> str:
@@ -3642,7 +3510,7 @@ def q_streaming_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from btrdb_server_spark.streaming.stateful import streaming_coverage
 
     work = _workdir(prefix="btrdb_scov_q_")
-    src_d, ckpt = f"{work}/src", f"{work}/ckpt"
+    src_d = f"{work}/src"
     pts = load_points(spark, sf_dir, T_2024, T_JAN10).where(
         F.col("uuid").isin("purchase", "error")
     )
@@ -3652,21 +3520,12 @@ def q_streaming_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(src_d)
     )
-    name = "stream_coverage_out"
-    with bounded_state_partitions(spark):
-        q = (
-            streaming_coverage(stream, T_2024, DAY_NS, HOUR_NS)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.sql(f"SELECT * FROM {name}").orderBy("uuid", "time")
+    out = _run_stream(
+        spark,
+        streaming_coverage(stream, T_2024, DAY_NS, HOUR_NS),
+        "stream_coverage_out",
+    )
+    return out.orderBy("uuid", "time")
 
 
 def _streaming_coverage_oracle_sql() -> str:
@@ -4530,7 +4389,7 @@ def q_streaming_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
     from btrdb_server_spark.streaming.stateful import streaming_holt
 
     work = _workdir(prefix="btrdb_sholt_q_")
-    src_d, ckpt = f"{work}/src", f"{work}/ckpt"
+    src_d = f"{work}/src"
     pts = load_points(spark, sf_dir, T_2024, T_JAN10).where(
         F.col("uuid").isin("purchase", "error")
     )
@@ -4540,21 +4399,8 @@ def q_streaming_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(src_d)
     )
-    name = "stream_holt_out"
-    with bounded_state_partitions(spark):
-        q = (
-            streaming_holt(stream)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.sql(f"SELECT * FROM {name}").orderBy("uuid", "time")
+    out = _run_stream(spark, streaming_holt(stream), "stream_holt_out")
+    return out.orderBy("uuid", "time")
 
 
 def _holt_flat_sql(uuid_filter: str, grouped: bool) -> str:
@@ -4834,7 +4680,7 @@ def q_streaming_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     from btrdb_server_spark.streaming.stateful import streaming_kmv
 
     work = _workdir(prefix="btrdb_skmv_q_")
-    src_d, ckpt = f"{work}/src", f"{work}/ckpt"
+    src_d = f"{work}/src"
     ev = load_table(spark, sf_dir, "events").select("event_type", "user_id")
     ev.repartition(4).write.mode("overwrite").parquet(src_d)
     stream = (
@@ -4842,34 +4688,12 @@ def q_streaming_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 2)
         .parquet(src_d)
     )
-    out = streaming_kmv(stream)
-    name = "stream_kmv_out"
-    with bounded_state_partitions(spark):
-        q = (
-            out.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    emitted = spark.sql(f"SELECT * FROM {name}")
-    from pyspark.sql import Window
-
-    # update mode re-emits per batch; the converged sketch is the row
-    # with the most kept hashes and, at n_kept = k, the smallest kth.
-    w = Window.partitionBy("uuid").orderBy(
-        F.col("n_kept").desc(), F.col("kth_hash")
-    )
-    return (
-        emitted.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("uuid", "n_kept", "kth_hash", "kmv_est")
-        .orderBy("uuid")
-    )
+    out = _run_stream(spark, streaming_kmv(stream), "stream_kmv_out")
+    # The converged sketch is the emission with the most kept hashes and,
+    # at n_kept = k, the smallest kth.
+    return _final_emission(
+        out, ["uuid"], F.col("n_kept").desc(), F.col("kth_hash")
+    ).orderBy("uuid")
 
 
 def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5382,7 +5206,7 @@ def q_streaming_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     from btrdb_server_spark.streaming.stateful import streaming_hll
 
     work = _workdir(prefix="btrdb_shll_q_")
-    src_d, ckpt = f"{work}/src", f"{work}/ckpt"
+    src_d = f"{work}/src"
     ev = load_table(spark, sf_dir, "events")
     ev = ev.select("event_type", "user_id", epoch_ns_expr(ev).alias("t_ns"))
     ids = ev.select(
@@ -5399,32 +5223,10 @@ def q_streaming_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 2)
         .parquet(src_d)
     )
-    out = streaming_hll(stream)
-    name = "stream_hll_out"
-    with bounded_state_partitions(spark):
-        q = (
-            out.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    emitted = spark.sql(f"SELECT * FROM {name}")
-    from pyspark.sql import Window
-
-    # update mode re-emits per batch; converged = the row with the
-    # largest seen-rows counter (strictly monotone per touched batch).
-    w = Window.partitionBy("uuid").orderBy(F.col("n_seen").desc())
-    return (
-        emitted.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("uuid", "n_seen", "n_registers_used", "hll_est")
-        .orderBy("uuid")
-    )
+    out = _run_stream(spark, streaming_hll(stream), "stream_hll_out")
+    # Converged = the emission with the largest seen-rows counter
+    # (strictly monotone per touched batch).
+    return _final_emission(out, ["uuid"], F.col("n_seen").desc()).orderBy("uuid")
 
 
 def q_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:

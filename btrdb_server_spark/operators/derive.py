@@ -16,6 +16,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from btrdb_server_spark.operators.fold import (
+    deadband_fold,
+    ewma_fold,
+    fold_batch,
+    holt_fold,
+    sdt_fold,
+)
+
 
 def _lagged(
     points: DataFrame,
@@ -363,7 +371,8 @@ def ewma(
     The recurrence is inherently sequential; two physical strategies:
 
     - bucket_pw=None (interactive): per-stream sorted fold
-      (sort_array(collect_list) + aggregate) — the EXACT left-to-right
+      (operators/fold.ewma_fold, the step streaming_ewma folds too) —
+      the EXACT left-to-right
       recurrence, bit-reproducible in any engine that folds the same
       order (the DuckDB oracle replays the identical op sequence). One
       row per stream holds the whole range: bounded ranges only.
@@ -421,42 +430,21 @@ def ewma(
         )
 
     if bucket_pw is None:
-        # One Arrow-shipped pandas fold per stream: the recurrence is
-        # inherently sequential, and the previous Catalyst form
-        # (F.aggregate growing an array with concat) copied the whole
-        # accumulated array per element — O(n^2) struct copies, measured
-        # 4.2 s for a 6k-point stream at sf0.1 vs ~0.6 s for this O(n)
-        # fold (guide §4.2: hand the sequential loop to Python once per
-        # group instead of fighting codegen). The op sequence is the
-        # IDENTICAL IEEE chain (a*x_i + b*s_{i-1}, each op rounded once),
-        # and the sort matches sort_array's (time, value) struct order,
-        # so results stay bit-equal to the DuckDB oracle's replay.
-        af, bf = float(alpha), 1.0 - float(alpha)
-
-        def _fold(pdf):
-            import numpy as np
-            import pandas as pd
-
-            pdf = pdf.sort_values(["time", "value"], kind="mergesort")
-            v = pdf["value"].to_numpy(dtype="float64")
-            s = np.empty(len(v), dtype="float64")
-            acc = v[0]
-            s[0] = acc
-            for i in range(1, len(v)):
-                acc = af * v[i] + bf * acc
-                s[i] = acc
-            return pd.DataFrame(
-                {
-                    "time": pdf["time"].to_numpy(dtype="int64"),
-                    "value": v,
-                    "ewma": s,
-                }
-            )
-
-        folded = src.groupBy("uuid").applyInPandas(
-            _fold, "time long, value double, ewma double"
-        )
-        return folded.orderBy("time")
+        # One Arrow-shipped fold per stream through the step streaming_ewma
+        # folds too (operators/fold.ewma_fold): O(n), where the previous
+        # Catalyst form (F.aggregate growing an array with concat) copied
+        # the whole accumulated array per element — O(n^2) struct copies,
+        # measured 4.2 s for a 6k-point stream at sf0.1 vs ~0.6 s (guide
+        # §4.2). The op sequence is the IDENTICAL IEEE chain (a*x_i +
+        # b*s_{i-1}, each op rounded once), and the (time, value) sort
+        # matches sort_array's struct order, so results stay bit-equal to
+        # the DuckDB oracle's replay.
+        return fold_batch(
+            src.select("uuid", "time", "value"),
+            ["uuid"],
+            ewma_fold(alpha),
+            "time long, value double, ewma double",
+        ).orderBy("time")
 
     # Scale path: per-bucket folds + affine carry chain.
     by_bucket = (
@@ -755,39 +743,17 @@ def deadband_compress(
         "value",
         F.round(F.col("value") / F.lit(value_quantum)).cast("long").alias("q"),
     )
-    # One Arrow-shipped pandas fold per stream (same treatment as ewma /
-    # holt_smooth flat paths, guide §4.2): the previous Catalyst form
+    # One Arrow-shipped fold per stream through the step streaming_deadband
+    # folds too (operators/fold.deadband_fold): the previous Catalyst form
     # (F.aggregate growing the kept array via concat) copied the whole
     # accumulated array on every KEPT point — O(kept²) struct copies in
     # one task. The keep decision is pure int64 arithmetic
     # (|q - q_kept| > dq), so the kept set is engine-exact either way,
     # and the sort matches sort_array's (time, value, q) struct order
     # (q is a function of value, so (time, value) decides every tie).
-    dqi = int(dq)
-
-    def _fold(pdf):
-        import numpy as np
-        import pandas as pd
-
-        pdf = pdf.sort_values(["time", "value"], kind="mergesort")
-        t = pdf["time"].to_numpy(dtype="int64")
-        v = pdf["value"].to_numpy(dtype="float64")
-        q = pdf["q"].to_numpy(dtype="int64")
-        keep = np.zeros(len(t), dtype=bool)
-        keep[0] = True
-        kq = int(q[0])
-        for i in range(1, len(t)):
-            qi = int(q[i])
-            if abs(qi - kq) > dqi:
-                keep[i] = True
-                kq = qi
-        return pd.DataFrame({"time": t[keep], "value": v[keep]})
-
-    return (
-        src.groupBy("uuid")
-        .applyInPandas(_fold, "time long, value double")
-        .orderBy("time")
-    )
+    return fold_batch(
+        src, ["uuid"], deadband_fold(int(dq)), "time long, value double"
+    ).orderBy("time")
 
 
 def rolling_stats(
@@ -1017,14 +983,13 @@ def sdt_compress(
     Execution: unlike deadband (whose kept set is tiny), SDT's output
     grows with the input, and a Catalyst higher-order fold must carry
     the kept array through every step — O(n^2) copying, measured 18 s at
-    20k points. The fold is therefore an Arrow-batched applyInPandas
-    (O(n), the documented seam for sequential set-emitting folds —
+    20k points. The fold is therefore an Arrow-batched applyInPandas of
+    operators/fold.sdt_fold, the step streaming_sdt folds too (O(n), the
+    documented seam for sequential set-emitting folds —
     Python floats are the same IEEE binary64, so the kept set is
     unchanged). Per-stream interactive ranges; chunk by time or serve
     plots from the ladder's decimation at 100 TB. Columns: time, value;
     ordered by time."""
-    import pandas as pd
-
     if tolerance <= 0:
         raise ValueError("tolerance must be positive")
     eq = round(tolerance / value_quantum)
@@ -1043,43 +1008,17 @@ def sdt_compress(
         )
     )
 
-    def fold(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        pdf = pdf.sort_values("time")
-        ts = pdf["time"].tolist()
-        qs = pdf["q"].tolist()
-        vs = pdf["value"].tolist()
-        n = len(ts)
-        if n == 0:
-            return pd.DataFrame({"time": [], "value": []})
-        kept_t, kept_v = [int(ts[0])], [float(vs[0])]
-        tp, qp = int(ts[0]), int(qs[0])
-        tl, ql, vl = tp, qp, float(vs[0])
-        slo, shi = float("-inf"), float("inf")
-        for i in range(1, n):
-            t, q, v = int(ts[i]), int(qs[i]), float(vs[i])
-            dt = float(t - tp)
-            nshi = min(shi, float(q + eq - qp) / dt)
-            nslo = max(slo, float(q - eq - qp) / dt)
-            if nslo > nshi:  # doors crossed: store the previous point
-                kept_t.append(tl)
-                kept_v.append(vl)
-                tp, qp = tl, ql
-                dt2 = float(t - tl)
-                shi = float(q + eq - ql) / dt2
-                slo = float(q - eq - ql) / dt2
-            else:
-                shi, slo = nshi, nslo
-            tl, ql, vl = t, q, v
-        if kept_t[-1] != tl:
-            kept_t.append(tl)
-            kept_v.append(vl)
-        return pd.DataFrame({"time": kept_t, "value": kept_v})
+    def final(state: tuple, out: dict) -> dict:
+        # a finite range stores its last point (the stream twin never does)
+        tl, vl = state[2], state[4]
+        if out["time"][-1] != tl:
+            out["time"].append(tl)
+            out["value"].append(vl)
+        return out
 
-    return (
-        src.groupBy(F.lit(1).alias("g"))
-        .applyInPandas(fold, "time long, value double")
-        .orderBy("time")
-    )
+    return fold_batch(
+        src, [F.lit(1).alias("g")], sdt_fold(eq), "time long, value double", final
+    ).orderBy("time")
 
 
 def exact_percentiles(
@@ -1246,52 +1185,25 @@ def holt_smooth(
     Bounded interactive ranges only — the scale paths are holt_forecast
     (per-window, embarrassingly parallel) or, for unbounded per-point
     output, the affine 2x2-matrix composition noted there."""
-    # Same shape as ewma's flat path: one Arrow-shipped pandas fold per
-    # stream replacing the O(n^2) array-growing Catalyst fold (measured
-    # 9.4 s -> ~0.6 s for a 6k-point stream at sf0.1; guide §4.2). The op
-    # sequence is the identical IEEE chain — lp computed once and reused
-    # in the trend update, (l + tr) parenthesized exactly as before — and
-    # the sort matches array_sort's (time, value) struct order, so the
+    # Same shape as ewma's flat path: one Arrow-shipped fold per stream
+    # through the step streaming_holt folds too (operators/fold.holt_fold),
+    # replacing the O(n^2) array-growing Catalyst fold (measured 9.4 s ->
+    # ~0.6 s for a 6k-point stream at sf0.1; guide §4.2). The op sequence
+    # is the identical IEEE chain — lp computed once and reused in the
+    # trend update, (l + tr) parenthesized exactly as before — and the
+    # sort matches array_sort's (time, value) struct order, so the
     # emission stays bit-equal to the DuckDB oracle's op-for-op replay.
-    af, bf = float(alpha), 1.0 - float(alpha)
-    gf, hf = float(beta), 1.0 - float(beta)
     src = points.where(
         (F.col("uuid") == F.lit(uuid))
         & (F.col("time") >= F.lit(start))
         & (F.col("time") < F.lit(end))
     ).select("uuid", "time", "value")
-
-    def _fold(pdf):
-        import numpy as np
-        import pandas as pd
-
-        pdf = pdf.sort_values(["time", "value"], kind="mergesort")
-        v = pdf["value"].to_numpy(dtype="float64")
-        n = len(v)
-        lvl = np.empty(n, dtype="float64")
-        trd = np.empty(n, dtype="float64")
-        l, tr = v[0], 0.0
-        lvl[0], trd[0] = l, tr
-        for i in range(1, n):
-            x = v[i]
-            lp = af * x + bf * (l + tr)
-            tr = gf * (lp - l) + hf * tr
-            l = lp
-            lvl[i], trd[i] = l, tr
-        return pd.DataFrame(
-            {
-                "time": pdf["time"].to_numpy(dtype="int64"),
-                "value": v,
-                "level": lvl,
-                "trend": trd,
-            }
-        )
-
-    return (
-        src.groupBy("uuid")
-        .applyInPandas(_fold, "time long, value double, level double, trend double")
-        .orderBy("time")
-    )
+    return fold_batch(
+        src,
+        ["uuid"],
+        holt_fold(alpha, beta),
+        "time long, value double, level double, trend double",
+    ).orderBy("time")
 
 
 def kalman_level(

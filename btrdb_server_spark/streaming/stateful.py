@@ -1,171 +1,153 @@
-"""Custom stateful streaming operator: incremental per-bucket statistics.
+"""Streaming twins: keyed-state folds over micro-batches.
 
-The reference accumulates (count, min, max, total) per window as tree
-fragments stream through a query (WindowContext, qtree/qtree.go:810-818,
-update/emit qtree.go:1033-1068) and folds the write buffer into window
-stats on ingest (CreateStatWindows, merger.go:218-253). The streaming form
-of that accumulator — a running StatPoint per (uuid, 2**pw bucket) updated
-as points arrive, with arbitrarily late data folding in (ST2: no
-watermark, nothing dropped) — needs keyed state Spark's built-in windowed
-aggregation only offers with watermark-bound state eviction.
+The reference folds points into per-window state as tree fragments stream
+through a query (WindowContext, qtree/qtree.go:810-818, update/emit
+qtree.go:1033-1068) and accepts arbitrarily late data (ST2: no watermark,
+nothing dropped). Spark's built-in windowed aggregation only offers keyed
+state with watermark-bound eviction, so every operator here is a
+FoldSpec run by operators/fold.fold_stream on applyInPandasWithState.
+The runner's contract, per group per micro-batch:
 
-applyInPandasWithState gives exactly that: state keyed by (uuid, bucket)
-holding the associative (min, sum, max, count) summary; every micro-batch
-folds its Arrow-batched rows into the summary and emits the updated
-StatPoint. State never expires (NoTimeout) — matching the reference, where
-a bucket from years ago is still updatable; at 100 TB the state store
-(RocksDB on executors) shards by the group key, so state size scales with
-DISTINCT touched buckets, not points.
+- state: the group's state row (the spec's state schema), or the spec's
+  initial state for a new group. It never expires (NoTimeout) — a bucket
+  from years ago is still updatable, as in the reference.
+- sort keys: all Arrow chunks of the group are concatenated and sorted
+  ONCE (stable) by the spec's keys, so out-of-order points within a
+  micro-batch are folded in order however Spark chunked the group.
+- frontier: an order-defined fold (ewma, deadband, SDT, crossings, Holt,
+  TWA, quantile, coverage) checks the first sorted row against the
+  state's frontier and raises rather than silently reordering an
+  already-emitted recurrence. SDT rejects a point AT the frontier too;
+  quantile and coverage compare window starts.
+- step: step(state, numpy columns) -> (state, output columns). The
+  runner updates the state and emits the columns, filling group-key
+  output columns from the key; a group with no rows emits nothing.
+
+The associative folds (stat, heavy hitters, LSH, sessions, attribution,
+KMV, HLL) have no frontier: late data folds in exactly. The ewma,
+deadband, SDT and Holt steps are the ones their batch operators in
+operators/derive.py fold, so on an in-order source a twin's emission is
+bit-equal to the batch fold by construction.
+
+At 100 TB the state store (RocksDB on executors) shards by the group key,
+so state size scales with DISTINCT touched keys, not points.
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterator, Tuple
+import json
+import math
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-OUTPUT_SCHEMA = (
-    "uuid string, bucket long, vmin double, vmean double, vmax double, cnt long"
+from btrdb_server_spark.operators.fold import (
+    FoldSpec,
+    deadband_fold,
+    ewma_fold,
+    fold_stream,
+    holt_fold,
+    sdt_fold,
 )
-STATE_SCHEMA = "vmin double, vsum double, vmax double, cnt long"
-STATE_SCHEMA_Q = "vmin double, vsumq long, vmax double, cnt long"
 
 
-def _make_update_bucket_stats_q(quantum: float):
-    """Quantized twin of _update_bucket_stats: the running sum is an EXACT
-    int64 of quantum units (the `vq` column the caller quantized JVM-side
-    with F.round — all decimal rounding stays in the engine, where oracle
-    parity is established). Integer addition is associative, so the
-    accumulated mean is bit-identical in ANY arrival order, micro-batch
-    partitioning, or engine — the rollup ladder's value_quantum
-    discipline applied to streaming state. min/max stay raw doubles
-    (order-free already)."""
+def _stat_fold(quantum: float | None) -> FoldSpec:
+    """Running StatPoint per (uuid, bucket): the associative combine of
+    merger.go:132-214 (min/min, max/max, sum+=, count+=; mean at emit).
+    With `quantum` the sum is an EXACT int64 of quantum units (the `vq`
+    column the caller quantized JVM-side), so the mean is bit-identical
+    in any arrival order; float(int64) * quantum / cnt is the SQL's
+    (sum(vq) * quantum) / count(*). Without it the float sum is in
+    arrival order and the mean is vsum * 1.0 / cnt (x * 1.0 is exact)."""
+    col, scale = ("value", 1.0) if quantum is None else ("vq", float(quantum))
 
-    def fn(
-        key: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        uuid, bucket = key
-        if state.exists:
-            vmin, vsumq, vmax, cnt = state.get
-        else:
-            vmin, vsumq, vmax, cnt = float("inf"), 0, float("-inf"), 0
-        for pdf in pdfs:
-            v = pdf["value"]
-            if len(v) == 0:
-                continue
-            vmin = min(vmin, float(v.min()))
-            vmax = max(vmax, float(v.max()))
-            vsumq += int(pdf["vq"].astype("int64").sum())
-            cnt += int(len(v))
-        if cnt == 0:
-            return
-        state.update((vmin, vsumq, vmax, cnt))
-        yield pd.DataFrame(
-            {
-                "uuid": [uuid],
-                "bucket": [bucket],
-                "vmin": [vmin],
-                # float(int64) is a hardware-correct cast; * quantum then
-                # / cnt is the same IEEE sequence as the SQL
-                # (sum(vq) * quantum) / count(*)
-                "vmean": [float(vsumq) * quantum / cnt],
-                "vmax": [vmax],
-                "cnt": [cnt],
-            }
-        )
-
-    return fn
-
-
-def _update_bucket_stats(
-    key: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Fold this micro-batch's points for one (uuid, bucket) group into the
-    running summary and emit the updated StatPoint. The merge is the
-    associative combine of merger.go:132-214: min/min, max/max, sum+=,
-    count+= (mean derived at emit)."""
-    uuid, bucket = key
-    if state.exists:
-        vmin, vsum, vmax, cnt = state.get
-    else:
-        vmin, vsum, vmax, cnt = float("inf"), 0.0, float("-inf"), 0
-    for pdf in pdfs:
-        v = pdf["value"]
-        if len(v) == 0:
-            continue
-        vmin = min(vmin, float(v.min()))
-        vmax = max(vmax, float(v.max()))
-        vsum += float(v.sum())
-        cnt += int(len(v))
-    if cnt == 0:
-        return
-    state.update((vmin, vsum, vmax, cnt))
-    yield pd.DataFrame(
-        {
-            "uuid": [uuid],
-            "bucket": [bucket],
+    def step(state: tuple, c: dict) -> tuple:
+        vmin, vsum, vmax, cnt = state
+        v = c["value"]
+        vmin = min(vmin, float(np.nanmin(v)))
+        vmax = max(vmax, float(np.nanmax(v)))
+        vsum += np.nansum(c[col]).item()
+        cnt += len(v)
+        return (vmin, vsum, vmax, cnt), {
             "vmin": [vmin],
-            "vmean": [vsum / cnt],
+            "vmean": [float(vsum) * scale / cnt],
             "vmax": [vmax],
             "cnt": [cnt],
         }
+
+    zero, sum_type = (0.0, "double") if quantum is None else (0, "long")
+    return FoldSpec(
+        "uuid string, bucket long, vmin double, vmean double, vmax double, cnt long",
+        f"vmin double, vsum {sum_type}, vmax double, cnt long",
+        (float("inf"), zero, float("-inf"), 0),
+        step,
     )
 
 
-HH_OUTPUT_SCHEMA = "shard int, token string, cnt long, overcount long"
-HH_STATE_SCHEMA = "js string"
+def streaming_stat_windows(
+    points_stream: DataFrame, pw: int, value_quantum: float | None = None
+) -> DataFrame:
+    """Running AlignedWindows over a stream: one updated StatPoint per
+    (uuid, 2**pw bucket) per micro-batch that touches it. Late points
+    reopen their bucket exactly (no watermark drop).
 
-
-def _update_heavy_hitters(capacity: int):
-    """Space-saving (Metwally et al.) heavy-hitters update for one shard:
-    bounded state of at most `capacity` counters. A new token beyond
-    capacity evicts the minimum counter and inherits its count as
-    `overcount` (cnt is then an upper bound, cnt - overcount a lower
-    bound — the standard sketch guarantees). Emits only the counters
-    touched by this micro-batch (update-mode semantics).
-
-    Determinism note: UNDER capacity the sketch is exact and
-    arrival-order independent. AT capacity, which counter gets evicted
-    depends on arrival order within the batch (inherent to every
-    space-saving implementation); the upper/lower-bound guarantees hold
-    under any order."""
-    import json
-
-    def fn(
-        key: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        shard = key[0]
-        d: dict = json.loads(state.get[0]) if state.exists else {}
-        touched = set()
-        for pdf in pdfs:
-            for tok, c in pdf["token"].value_counts().items():
-                c = int(c)
-                if tok in d:
-                    d[tok][0] += c
-                elif len(d) < capacity:
-                    d[tok] = [c, 0]
-                else:
-                    evict = min(d, key=lambda t: (d[t][0], t))
-                    m = d.pop(evict)[0]
-                    d[tok] = [m + c, m]
-                touched.add(tok)
-        if not touched:
-            return
-        state.update((json.dumps(d),))
-        rows = sorted((t, d[t][0], d[t][1]) for t in touched if t in d)
-        yield pd.DataFrame(
-            {
-                "shard": [shard] * len(rows),
-                "token": [r[0] for r in rows],
-                "cnt": [r[1] for r in rows],
-                "overcount": [r[2] for r in rows],
-            }
+    `value_quantum` (e.g. 0.01): accumulate the mean's sum as an EXACT
+    int64 of quantum units instead of a float — the mean is then
+    bit-identical regardless of arrival order or micro-batch boundaries
+    (and to a batch recomputation in any engine). The raw-float default
+    sums in arrival order, which is fine for dashboards but not for
+    bit-parity: the first full sf0.1 oracle sweep surfaced a 32-point
+    bucket whose pairwise numpy sum straddled a 6-digit rounding boundary
+    against the scan-order SQL sum."""
+    src = points_stream.withColumn(
+        "bucket", F.shiftleft(F.shiftright("time", pw), pw)
+    )
+    if value_quantum is not None:
+        src = src.withColumn(
+            "vq", F.round(F.col("value") / F.lit(float(value_quantum))).cast("long")
         )
+    return fold_stream(src, ["uuid", "bucket"], _stat_fold(value_quantum))
 
-    return fn
+
+def _heavy_hitters_fold(capacity: int) -> FoldSpec:
+    """Space-saving (Metwally et al.) counters for one shard: at most
+    `capacity` of them. A new token beyond capacity evicts the minimum
+    counter and inherits its count as `overcount` (cnt is then an upper
+    bound, cnt - overcount a lower bound). Emits only the counters this
+    micro-batch touched. Under capacity the sketch is exact and
+    arrival-order independent; at capacity, which counter is evicted
+    depends on arrival order (inherent to space-saving), the bounds hold
+    under any order."""
+
+    def step(state: tuple, c: dict) -> tuple:
+        d = json.loads(state[0])
+        touched = set()
+        for tok, n in pd.Series(c["token"]).value_counts().items():
+            n = int(n)
+            if tok in d:
+                d[tok][0] += n
+            elif len(d) < capacity:
+                d[tok] = [n, 0]
+            else:
+                evict = min(d, key=lambda t: (d[t][0], t))
+                m = d.pop(evict)[0]
+                d[tok] = [m + n, m]
+            touched.add(tok)
+        rows = sorted((t, d[t][0], d[t][1]) for t in touched if t in d)
+        return (json.dumps(d),), {
+            "token": [r[0] for r in rows],
+            "cnt": [r[1] for r in rows],
+            "overcount": [r[2] for r in rows],
+        }
+
+    return FoldSpec(
+        "shard int, token string, cnt long, overcount long",
+        "js string",
+        ("{}",),
+        step,
+    )
 
 
 def streaming_heavy_hitters(
@@ -183,56 +165,32 @@ def streaming_heavy_hitters(
     `token_stream` needs one `token string` column. At 100 TB: shard count
     spreads the sketches across executors; capacity bounds each executor's
     state; back the store with RocksDB for large capacity."""
-    keyed = token_stream.withColumn(
+    sharded = token_stream.withColumn(
         "shard", F.pmod(F.xxhash64("token"), F.lit(num_shards)).cast("int")
-    ).groupBy("shard")
-    return keyed.applyInPandasWithState(
-        _update_heavy_hitters(capacity),
-        HH_OUTPUT_SCHEMA,
-        HH_STATE_SCHEMA,
-        "update",
-        GroupStateTimeout.NoTimeout,
     )
+    return fold_stream(sharded, ["shard"], _heavy_hitters_fold(capacity))
 
 
-LSH_OUTPUT_SCHEMA = "a long, b long"
-LSH_STATE_SCHEMA = "js string"
-
-
-def _update_lsh_shard(
-    key: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
+def _lsh_step(state: tuple, c: dict) -> tuple:
     """Incremental LSH buckets for one SHARD of the band-key space: state
     maps band-bucket -> resident doc ids; each arriving doc emits a
     candidate pair against every resident of its bucket — the pair stream
     grows exactly as the batch self-join would, but per batch only
-    new x (old + earlier-new) work is done, never a full bucket re-join.
-    Sharding (instead of one state group per bucket) bounds the number of
-    Arrow/pandas round-trips per micro-batch at the shard count — a
-    per-bucket grouping would pay one Python call per DISTINCT bucket,
-    which is corpus-scale."""
-    import json
-
-    d: dict = json.loads(state.get[0]) if state.exists else {}
+    new x (old + earlier-new) work is done, never a full bucket re-join."""
+    d = json.loads(state[0])
+    resident: dict = {}
     pairs = []
-    touched = False
-    for pdf in pdfs:
-        for bkey, grp in pdf.groupby("bkey", sort=True):
-            bucket = d.setdefault(bkey, [])
-            resident = set(bucket)
-            for doc in sorted(int(x) for x in grp["doc_id"].unique()):
-                if doc in resident:
-                    continue
-                pairs.extend((min(doc, o), max(doc, o)) for o in resident)
-                resident.add(doc)
-                bucket.append(doc)
-                touched = True
-    if not touched:
-        return
-    state.update((json.dumps(d),))
-    if pairs:
-        pairs.sort()
-        yield pd.DataFrame({"a": [p[0] for p in pairs], "b": [p[1] for p in pairs]})
+    for bkey, doc in sorted(set(zip(c["bkey"].tolist(), c["doc_id"].tolist()))):
+        if bkey not in resident:
+            resident[bkey] = set(d.setdefault(bkey, []))
+        r = resident[bkey]
+        if doc in r:
+            continue
+        pairs.extend((min(doc, o), max(doc, o)) for o in r)
+        r.add(doc)
+        d[bkey].append(doc)
+    pairs.sort()
+    return (json.dumps(d),), {"a": [p[0] for p in pairs], "b": [p[1] for p in pairs]}
 
 
 def streaming_lsh_candidates(
@@ -296,87 +254,53 @@ def streaming_lsh_candidates(
             "shard", F.pmod(F.xxhash64("bkey"), F.lit(num_shards)).cast("int")
         )
     )
-    return banded.groupBy("shard").applyInPandasWithState(
-        _update_lsh_shard,
-        LSH_OUTPUT_SCHEMA,
-        LSH_STATE_SCHEMA,
-        "update",
-        GroupStateTimeout.NoTimeout,
+    return fold_stream(
+        banded, ["shard"], FoldSpec("a long, b long", "js string", ("{}",), _lsh_step)
     )
 
 
-SESS_OUTPUT_SCHEMA = (
-    "uuid string, seq long, session_start long, session_end long, n_points long"
-)
-SESS_STATE_SCHEMA = "js string, seq long"
+def _sessions_fold(gap: int) -> FoldSpec:
+    """Gap-based sessionization for one stream: state is the list of
+    session intervals [start, end, n_points], which by invariant contains
+    no interior point-to-point spacing >= gap. The micro-batch is itself
+    sessionized (vectorized numpy diff over the sorted times — the
+    Python-side work is O(sessions), never O(points)), then the two
+    interval systems are fused by a sorted sweep: a batch interval lands
+    in an existing session, bridges two, or swallows any number of them
+    when a late slice of history arrives. Every boundary is an actual
+    point, so boundary distance IS an adjacent-point spacing; sessions are
+    a function of the point SET, whatever the arrival order. Each batch
+    emits the stream's full session list under a new `seq`."""
 
-
-def _update_sessions(gap: int):
-    """Incremental gap-based sessionization for one stream: state is the
-    list of session intervals [start, end, n_points], which by invariant
-    contains no interior point-to-point spacing >= gap. Each micro-batch
-    is itself sessionized (vectorized numpy diff), then the two interval
-    systems are fused by a sorted sweep — a batch interval lands in an
-    existing session, bridges two, or swallows any number of them when a
-    late slice of history arrives (the reference's ST2 semantics:
-    arbitrarily late data, nothing dropped, no watermark). The result is
-    arrival-order independent: sessions are a function of the point SET.
-    Each batch emits the stream's full updated session list under a new
-    `seq`; consumers take the max-seq snapshot per stream (a merged-away
-    session cannot be expressed by per-session emissions alone)."""
-    import json
-
-    import numpy as np
-
-    def fn(
-        key: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (uuid,) = key
-        if state.exists:
-            js, seq = state.get
-            ivs = json.loads(js)
-        else:
-            ivs, seq = [], 0
-        # Vectorized batch pre-sessionization: the Python-side work is
-        # O(sessions), never O(points) — point-scale ops stay in numpy.
-        parts = [pdf["time"].to_numpy(dtype="int64") for pdf in pdfs]
-        if not parts:
-            return
-        ts = np.sort(np.concatenate(parts))
-        if len(ts) == 0:
-            return
-        brk = (np.flatnonzero(np.diff(ts) >= gap) + 1).tolist()
-        bounds = [0] + brk + [len(ts)]
+    def step(state: tuple, c: dict) -> tuple:
+        js, seq = state
+        ts = c["time"]
+        bounds = [0] + (np.flatnonzero(np.diff(ts) >= gap) + 1).tolist() + [len(ts)]
         batch_ivs = [
-            [int(ts[s]), int(ts[e - 1]), e - s]
-            for s, e in zip(bounds, bounds[1:])
+            [int(ts[s]), int(ts[e - 1]), e - s] for s, e in zip(bounds, bounds[1:])
         ]
-        # Merge the two interval systems (both hold the no-interior-gap
-        # invariant; every boundary is an actual point, so boundary
-        # distance IS an adjacent-point spacing): sorted sweep, fusing
-        # while the next start is within gap of the running end. One late
-        # batch interval can bridge/swallow any number of state sessions.
-        merged = []
-        for iv in sorted(ivs + batch_ivs):
-            if merged and iv[0] - merged[-1][1] < gap:
-                merged[-1][1] = max(merged[-1][1], iv[1])
-                merged[-1][2] += iv[2]
+        ivs = []
+        for iv in sorted(json.loads(js) + batch_ivs):
+            if ivs and iv[0] - ivs[-1][1] < gap:
+                ivs[-1][1] = max(ivs[-1][1], iv[1])
+                ivs[-1][2] += iv[2]
             else:
-                merged.append(list(iv))
-        ivs = merged
+                ivs.append(list(iv))
         seq += 1
-        state.update((json.dumps(ivs), seq))
-        yield pd.DataFrame(
-            {
-                "uuid": [uuid] * len(ivs),
-                "seq": [seq] * len(ivs),
-                "session_start": [iv[0] for iv in ivs],
-                "session_end": [iv[1] for iv in ivs],
-                "n_points": [iv[2] for iv in ivs],
-            }
-        )
+        return (json.dumps(ivs), seq), {
+            "seq": [seq] * len(ivs),
+            "session_start": [iv[0] for iv in ivs],
+            "session_end": [iv[1] for iv in ivs],
+            "n_points": [iv[2] for iv in ivs],
+        }
 
-    return fn
+    return FoldSpec(
+        "uuid string, seq long, session_start long, session_end long, n_points long",
+        "js string, seq long",
+        ("[]", 0),
+        step,
+        sort=("time",),
+    )
 
 
 def streaming_sessionize(points_stream: DataFrame, gap: int) -> DataFrame:
@@ -392,172 +316,23 @@ def streaming_sessionize(points_stream: DataFrame, gap: int) -> DataFrame:
     stream — fine for telemetry (sessions per stream bounded by
     span/gap); back the store with RocksDB for long histories. Output
     carries `seq`; take each stream's max-seq rows as the current
-    snapshot."""
-    return points_stream.groupBy("uuid").applyInPandasWithState(
-        _update_sessions(gap),
-        SESS_OUTPUT_SCHEMA,
-        SESS_STATE_SCHEMA,
-        "update",
-        GroupStateTimeout.NoTimeout,
-    )
-
-
-def streaming_stat_windows(
-    points_stream: DataFrame, pw: int, value_quantum: float | None = None
-) -> DataFrame:
-    """Running AlignedWindows over a stream: one updated StatPoint per
-    (uuid, 2**pw bucket) per micro-batch that touches it. Late points
-    reopen their bucket exactly (no watermark drop).
-
-    `value_quantum` (e.g. 0.01): accumulate the mean's sum as an EXACT
-    int64 of quantum units instead of a float — the mean is then
-    bit-identical regardless of arrival order or micro-batch boundaries
-    (and to a batch recomputation in any engine). The raw-float default
-    sums in arrival order, which is fine for dashboards but not for
-    bit-parity: the first full sf0.1 oracle sweep surfaced a 32-point
-    bucket whose pairwise numpy sum straddled a 6-digit rounding boundary
-    against the scan-order SQL sum."""
-    src = points_stream.withColumn(
-        "bucket", F.shiftleft(F.shiftright("time", pw), pw)
-    )
-    if value_quantum is None:
-        return src.groupBy("uuid", "bucket").applyInPandasWithState(
-            _update_bucket_stats,
-            OUTPUT_SCHEMA,
-            STATE_SCHEMA,
-            "update",
-            GroupStateTimeout.NoTimeout,
-        )
-    src = src.withColumn(
-        "vq", F.round(F.col("value") / F.lit(float(value_quantum))).cast("long")
-    )
-    return src.groupBy("uuid", "bucket").applyInPandasWithState(
-        _make_update_bucket_stats_q(float(value_quantum)),
-        OUTPUT_SCHEMA,
-        STATE_SCHEMA_Q,
-        "update",
-        GroupStateTimeout.NoTimeout,
-    )
-
-
-EWMA_OUTPUT_SCHEMA = "uuid string, time long, value double, ewma double"
-EWMA_STATE_SCHEMA = "last_time long, last_ewma double"
-
-
-def _make_update_ewma(alpha: float):
-    a, b = float(alpha), 1.0 - float(alpha)
-
-    def fn(
-        key: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        """Continue one stream's EWMA recurrence across micro-batches:
-        state is (last_time, last_ewma); each batch's points are folded in
-        time order with the IDENTICAL op sequence as the batch operator
-        (s = a*x + b*s), so on an in-order source the emitted values are
-        bit-equal to derive.ewma's flat path. Out-of-order points within a
-        batch are sorted; points older than the state's frontier would
-        reorder an already-emitted recurrence and are REJECTED by contract
-        (ewma is order-defined — unlike the associative stat/session
-        state, late data cannot be folded in exactly; resample first if
-        the source is not in order)."""
-        (uuid,) = key
-        if state.exists:
-            last_t, s = state.get
-        else:
-            last_t, s = None, None
-        out_t, out_v, out_e = [], [], []
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.sort_values(["time", "value"])
-            for t, v in zip(pdf["time"].astype("int64"), pdf["value"]):
-                t, v = int(t), float(v)
-                if last_t is not None and t < last_t:
-                    raise ValueError(
-                        f"stream {uuid}: point at {t} arrived after the "
-                        f"EWMA frontier {last_t} — order-defined operator"
-                    )
-                s = v if s is None else a * v + b * s
-                last_t = t
-                out_t.append(t)
-                out_v.append(v)
-                out_e.append(s)
-        if not out_t:
-            return
-        state.update((last_t, s))
-        yield pd.DataFrame(
-            {"uuid": uuid, "time": out_t, "value": out_v, "ewma": out_e}
-        )
-
-    return fn
+    snapshot (a merged-away session cannot be expressed by per-session
+    emissions alone)."""
+    return fold_stream(points_stream, ["uuid"], _sessions_fold(gap))
 
 
 def streaming_ewma(points_stream: DataFrame, alpha: float = 0.25) -> DataFrame:
     """EWMA as a continuous query: keyed state per stream carries
     (frontier, running ewma), so the recurrence continues seamlessly
     across micro-batches — on an in-order source the emission equals the
-    batch operator bit-for-bit (asserted by the driver pair). State is two
-    scalars per stream: O(streams), the smallest state of any operator
-    here. The order contract is enforced, not assumed: a point behind the
-    frontier raises rather than silently corrupting the recurrence."""
+    batch operator bit-for-bit (both fold operators/fold.ewma_fold). State
+    is two scalars per stream: O(streams), the smallest state of any
+    operator here. The order contract is enforced, not assumed: a point
+    behind the frontier raises rather than silently corrupting the
+    recurrence (resample first if the source is not in order)."""
     if not 0.0 < alpha <= 1.0:
         raise ValueError("alpha must be in (0, 1]")
-    return points_stream.groupBy("uuid").applyInPandasWithState(
-        _make_update_ewma(alpha),
-        EWMA_OUTPUT_SCHEMA,
-        EWMA_STATE_SCHEMA,
-        "update",
-        GroupStateTimeout.NoTimeout,
-    )
-
-
-DEADBAND_OUTPUT_SCHEMA = "uuid string, time long, value double"
-DEADBAND_STATE_SCHEMA = "last_time long, kept_q long"
-
-
-def _make_update_deadband(deadband_q: int):
-    def fn(
-        key: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        """Deadband compression at ingest for one stream: state is two
-        scalars (frontier time, last KEPT value in quantum units). Each
-        batch folds its points in time order with the identical decision
-        sequence as the batch operator, so on an in-order source the kept
-        set is bit-equal to derive.deadband_compress — which is the
-        oracle. Like streaming_ewma, the operator is order-DEFINED: a
-        point behind the frontier raises rather than silently changing
-        which points were kept."""
-        (uuid,) = key
-        if state.exists:
-            last_t, kq = state.get
-        else:
-            last_t, kq = None, None
-        out_t, out_v = [], []
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.sort_values(["time", "value"])
-            for t, v, q in zip(
-                pdf["time"].astype("int64"), pdf["value"], pdf["q"].astype("int64")
-            ):
-                t, v, q = int(t), float(v), int(q)
-                if last_t is not None and t < last_t:
-                    raise ValueError(
-                        f"stream {uuid}: point at {t} behind the deadband "
-                        f"frontier {last_t} — order-defined operator"
-                    )
-                last_t = t
-                if kq is None or abs(q - kq) > deadband_q:
-                    kq = q
-                    out_t.append(t)
-                    out_v.append(v)
-        if last_t is None:
-            return
-        state.update((last_t, kq))
-        if out_t:
-            yield pd.DataFrame({"uuid": uuid, "time": out_t, "value": out_v})
-
-    return fn
+    return fold_stream(points_stream, ["uuid"], ewma_fold(alpha))
 
 
 def streaming_deadband(
@@ -569,90 +344,16 @@ def streaming_deadband(
     path emits ONLY exception points (value moved more than `deadband`
     from the last kept reading), cutting the stored volume at the
     source — the write-side dual of the batch deadband_compress scan.
-    State is two scalars per stream; on an in-order source the kept set
-    is bit-equal to the batch fold (the driver oracle)."""
+    State is two scalars per stream (frontier, last kept quantum); on an
+    in-order source the kept set is bit-equal to the batch fold (the
+    driver oracle). A point behind the frontier raises."""
     if deadband <= 0:
         raise ValueError("deadband must be positive")
     dq = round(deadband / value_quantum)
     with_q = points_stream.withColumn(
         "q", F.round(F.col("value") / F.lit(value_quantum)).cast("long")
     )
-    return with_q.groupBy("uuid").applyInPandasWithState(
-        _make_update_deadband(dq),
-        DEADBAND_OUTPUT_SCHEMA,
-        DEADBAND_STATE_SCHEMA,
-        "update",
-        GroupStateTimeout.NoTimeout,
-    )
-
-
-SDT_OUTPUT_SCHEMA = "uuid string, time long, value double"
-SDT_STATE_SCHEMA = (
-    "tp long, qp long, tl long, ql long, vl double, slo double, shi double"
-)
-
-
-def _make_update_sdt(eq: int):
-    def fn(
-        key: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        """Swinging-door trending at ingest for one stream: state is the
-        seven SDT scalars (pivot, last point, slope envelope). Each batch
-        folds its points in time order with the identical decision
-        sequence as the batch operator, so on an in-order source the
-        emitted set is bit-equal to derive.sdt_compress MINUS the final
-        point (a stream has no end; the batch operator's trailing append
-        is a batch-only convention — the oracle drops it). Duplicate
-        timestamps collapse to their max value WITHIN a batch (same rule
-        as the batch scan); a point at or behind the frontier raises —
-        order-defined, like streaming_deadband/streaming_ewma."""
-        (uuid,) = key
-        started = state.exists
-        if started:
-            tp, qp, tl, ql, vl, slo, shi = state.get
-        out_t, out_v = [], []
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.sort_values(["time", "value"]).drop_duplicates(
-                "time", keep="last"
-            )
-            for t, v, q in zip(
-                pdf["time"].astype("int64"), pdf["value"], pdf["q"].astype("int64")
-            ):
-                t, v, q = int(t), float(v), int(q)
-                if not started:
-                    out_t.append(t)
-                    out_v.append(v)
-                    tp, qp, tl, ql, vl = t, q, t, q, v
-                    slo, shi = float("-inf"), float("inf")
-                    started = True
-                    continue
-                if t <= tl:
-                    raise ValueError(
-                        f"stream {uuid}: point at {t} at/behind the SDT "
-                        f"frontier {tl} — order-defined operator"
-                    )
-                dt = float(t - tp)
-                nshi = min(shi, float(q + eq - qp) / dt)
-                nslo = max(slo, float(q - eq - qp) / dt)
-                if nslo > nshi:  # doors crossed: store the previous point
-                    out_t.append(tl)
-                    out_v.append(vl)
-                    tp, qp = tl, ql
-                    dt2 = float(t - tl)
-                    shi = float(q + eq - ql) / dt2
-                    slo = float(q - eq - ql) / dt2
-                else:
-                    shi, slo = nshi, nslo
-                tl, ql, vl = t, q, v
-        if not started:
-            return
-        state.update((tp, qp, tl, ql, vl, slo, shi))
-        if out_t:
-            yield pd.DataFrame({"uuid": uuid, "time": out_t, "value": out_v})
-
-    return fn
+    return fold_stream(with_q, ["uuid"], deadband_fold(dq))
 
 
 def streaming_sdt(
@@ -665,71 +366,47 @@ def streaming_sdt(
     dual of the batch sdt_compress scan, cutting stored volume at the
     source the way a PI-style historian does. State is seven scalars per
     stream; on an in-order source the emitted set is bit-equal to the
-    batch fold minus its trailing final-point append (the oracle)."""
+    batch fold minus its trailing final-point append (a stream has no
+    end; the oracle drops it). Duplicate timestamps collapse to their max
+    value within a micro-batch; a point at or behind the frontier
+    raises."""
     if tolerance <= 0:
         raise ValueError("tolerance must be positive")
     eq = round(tolerance / value_quantum)
     with_q = points_stream.withColumn(
         "q", F.round(F.col("value") / F.lit(value_quantum)).cast("long")
     )
-    return with_q.groupBy("uuid").applyInPandasWithState(
-        _make_update_sdt(eq),
-        SDT_OUTPUT_SCHEMA,
-        SDT_STATE_SCHEMA,
-        "update",
-        GroupStateTimeout.NoTimeout,
-    )
+    return fold_stream(with_q, ["uuid"], sdt_fold(eq))
 
 
-CROSSINGS_OUTPUT_SCHEMA = (
-    "uuid string, time long, value double, prev_time long, "
-    "prev_value double, direction string"
-)
-CROSSINGS_STATE_SCHEMA = "last_time long, last_value double"
+def _crossings_fold(threshold: float) -> FoldSpec:
+    """Emit a row whenever the value crosses `threshold` relative to its
+    predecessor — the decision sequence of derive.threshold_crossings.
+    State: the last seen (time, value)."""
 
-
-def _make_update_crossings(threshold: float):
-    def fn(
-        key: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        """Threshold-edge detection at ingest for one stream: state is the
-        last seen (time, value). Each batch scans its points in time
-        order and emits a row whenever the value crosses the threshold
-        relative to its predecessor — the same decision sequence as the
-        batch operator, so on an in-order source the alert set is
-        bit-equal to derive.threshold_crossings (the oracle).
-        Order-defined: a point behind the frontier raises."""
-        (uuid,) = key
-        if state.exists:
-            last_t, last_v = state.get
-        else:
-            last_t, last_v = None, None
+    def step(state: tuple, c: dict) -> tuple:
+        last_t, last_v = state
         out = {k: [] for k in ("time", "value", "prev_time", "prev_value", "direction")}
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.sort_values(["time", "value"])
-            for t, v in zip(pdf["time"].astype("int64"), pdf["value"]):
-                t, v = int(t), float(v)
-                if last_t is not None and t < last_t:
-                    raise ValueError(
-                        f"stream {uuid}: point at {t} behind the crossings "
-                        f"frontier {last_t} — order-defined operator"
-                    )
-                if last_t is not None and (v >= threshold) != (last_v >= threshold):
-                    out["time"].append(t)
-                    out["value"].append(v)
-                    out["prev_time"].append(last_t)
-                    out["prev_value"].append(last_v)
-                    out["direction"].append("up" if v >= threshold else "down")
-                last_t, last_v = t, v
-        if last_t is None:
-            return
-        state.update((last_t, last_v))
-        if out["time"]:
-            yield pd.DataFrame({"uuid": uuid, **out})
+        for t, v in zip(c["time"].tolist(), c["value"].tolist()):
+            if last_t is not None and (v >= threshold) != (last_v >= threshold):
+                out["time"].append(t)
+                out["value"].append(v)
+                out["prev_time"].append(last_t)
+                out["prev_value"].append(last_v)
+                out["direction"].append("up" if v >= threshold else "down")
+            last_t, last_v = t, v
+        return (last_t, last_v), out
 
-    return fn
+    return FoldSpec(
+        "uuid string, time long, value double, prev_time long, "
+        "prev_value double, direction string",
+        "last_time long, last_value double",
+        (None, None),
+        step,
+        sort=("time", "value"),
+        frontier=0,
+        late="behind the crossings frontier",
+    )
 
 
 def streaming_crossings(
@@ -741,111 +418,62 @@ def streaming_crossings(
     the at-ingest twin of the batch threshold_crossings scan (SCADA
     alarms fire on arrival, not on the next batch scan). State is two
     scalars per stream; on an in-order source the alert set is bit-equal
-    to the batch operator (the oracle)."""
-    return points_stream.groupBy("uuid").applyInPandasWithState(
-        _make_update_crossings(threshold),
-        CROSSINGS_OUTPUT_SCHEMA,
-        CROSSINGS_STATE_SCHEMA,
-        "update",
-        GroupStateTimeout.NoTimeout,
-    )
+    to the batch operator (the oracle). A point behind the frontier
+    raises."""
+    return fold_stream(points_stream, ["uuid"], _crossings_fold(threshold))
 
 
-ATTR_OUTPUT_SCHEMA = (
-    "event_id long, conv_time long, touch_event_id long, touch_type string, "
-    "touch_time long, latency long"
+ATTR_COLUMNS = (
+    "event_id", "conv_time", "touch_event_id", "touch_type", "touch_time", "latency"
 )
-ATTR_STATE_SCHEMA = "js string"
 
 
-def _make_update_attribution(conversion: str, within):
-    import json
+def _attribution_fold(within) -> FoldSpec:
+    """Last-touch attribution for one SHARD of the user space: state maps
+    user -> most recent touch [time, event_id, event_type]. Rows arrive in
+    (time, touch, event_id) order — conversions BEFORE equal-time
+    touches, the exact total order of the batch operator's carry window;
+    users never interact, so the global time order replays every user's
+    own sequence. A conversion emits immediately with the state touch (or
+    NULLs when none / outside the lookback window)."""
 
-    def fn(
-        key: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        """Last-touch attribution at ingest for one SHARD of the user
-        space: state is the shard's map user -> most recent touch
-        (time, event_id, event_type). Each batch replays its events in
-        (time, kind, event_id) order with conversions BEFORE equal-time
-        touches — the exact total order of the batch operator's carry
-        window; users never interact, so the global time order replays
-        every user's own sequence — and on an in-order source the
-        emitted attribution set is bit-equal to
-        events.attribution_last_touch (the oracle). A conversion emits
-        immediately with the state touch (or NULLs when none / outside
-        the lookback window).
-
-        Keyed by hash SHARD, not by user: a per-user grouping pays one
-        Python group invocation + state (de)serialization per ACTIVE
-        USER per micro-batch — corpus-scale, measured 3.5x slower at
-        sf0.1 (1500 users: 18.4 s vs 5.2 s) — while shards bound the
-        round trips at num_shards, the same design as
-        streaming_lsh_candidates. Within a shard the replay is one
-        dict-carried pass over the batch's rows."""
-        if state.exists:
-            (js,) = state.get
-            st = json.loads(js)
-        else:
-            st = {}
-        chunks = [p for p in pdfs if len(p)]
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-        import numpy as np
-
-        kind = (pdf["event_type"] != conversion).to_numpy()
-        order = np.lexsort(
-            (pdf["event_id"].to_numpy(), kind, pdf["time"].to_numpy())
-        )
-        times = pdf["time"].astype("int64").to_numpy()[order]
-        eids = pdf["event_id"].astype("int64").to_numpy()[order]
-        users = pdf["user_id"].astype("int64").to_numpy()[order]
-        ets = pdf["event_type"].astype(object).to_numpy()[order]
-        kinds = kind[order]
-        out = {
-            k: []
-            for k in (
-                "event_id", "conv_time", "touch_event_id", "touch_type",
-                "touch_time", "latency",
-            )
+    def step(state: tuple, c: dict) -> tuple:
+        st = json.loads(state[0])
+        out = {k: [] for k in ATTR_COLUMNS}
+        for t, eid, user, et, touch in zip(
+            c["time"].tolist(),
+            c["event_id"].tolist(),
+            c["user_id"].tolist(),
+            c["event_type"].tolist(),
+            c["touch"].tolist(),
+        ):
+            u = str(user)
+            if touch:
+                st[u] = [t, eid, str(et)]
+                continue
+            lt = st.get(u)
+            ok = lt is not None and (within is None or t - lt[0] <= within)
+            out["event_id"].append(eid)
+            out["conv_time"].append(t)
+            out["touch_event_id"].append(lt[1] if ok else None)
+            out["touch_type"].append(lt[2] if ok else None)
+            out["touch_time"].append(lt[0] if ok else None)
+            out["latency"].append(t - lt[0] if ok else None)
+        # Nullable Int64 arrays: a plain DataFrame would infer float64 for
+        # [int, None] columns and shred ns-scale int64s (ulp 256 at 2^60).
+        dtypes = ("int64", "int64", "Int64", object, "Int64", "Int64")
+        return (json.dumps(st, sort_keys=True, separators=(",", ":")),), {
+            k: pd.array(out[k], dtype=d) for k, d in zip(ATTR_COLUMNS, dtypes)
         }
-        for i in range(len(times)):
-            u = str(int(users[i]))
-            t, eid = int(times[i]), int(eids[i])
-            if not kinds[i]:  # conversion
-                lt = st.get(u)
-                ok = lt is not None and (within is None or t - lt[0] <= within)
-                out["event_id"].append(eid)
-                out["conv_time"].append(t)
-                out["touch_event_id"].append(lt[1] if ok else None)
-                out["touch_type"].append(lt[2] if ok else None)
-                out["touch_time"].append(lt[0] if ok else None)
-                out["latency"].append(t - lt[0] if ok else None)
-            else:
-                st[u] = [t, eid, str(ets[i])]
-        if st:
-            state.update(
-                (json.dumps(st, sort_keys=True, separators=(",", ":")),)
-            )
-        if out["event_id"]:
-            # Nullable Int64 arrays: a plain DataFrame would infer float64
-            # for [int, None] columns and shred ns-scale int64s (ulp 256
-            # at 2^60).
-            yield pd.DataFrame(
-                {
-                    "event_id": pd.array(out["event_id"], dtype="int64"),
-                    "conv_time": pd.array(out["conv_time"], dtype="int64"),
-                    "touch_event_id": pd.array(
-                        out["touch_event_id"], dtype="Int64"
-                    ),
-                    "touch_type": pd.array(out["touch_type"], dtype=object),
-                    "touch_time": pd.array(out["touch_time"], dtype="Int64"),
-                    "latency": pd.array(out["latency"], dtype="Int64"),
-                }
-            )
 
-    return fn
+    return FoldSpec(
+        "event_id long, conv_time long, touch_event_id long, touch_type string, "
+        "touch_time long, latency long",
+        "js string",
+        ("{}",),
+        step,
+        sort=("time", "touch", "event_id"),
+    )
 
 
 def streaming_attribution(
@@ -862,85 +490,16 @@ def streaming_attribution(
     triple per user, held in hash SHARDS of the user space so per-batch
     Python round-trips are bounded by num_shards, not by active users
     (the streaming_lsh_candidates design; a per-user grouping measured
-    3.5x slower at sf0.1's 1500 users). On an in-order source the
-    attribution set is bit-equal to the batch operator (the oracle).
-    The stream must be pre-filtered to the conversion + touch types of
-    interest. At 100 TB: size num_shards to keep a shard's user map at
-    MBs and back the store with RocksDB — state scales with DISTINCT
-    users, the shuffle with batch rows."""
+    3.5x slower at sf0.1's 1500 users: 18.4 s vs 5.2 s). On an in-order
+    source the attribution set is bit-equal to the batch operator (the
+    oracle). The stream must be pre-filtered to the conversion + touch
+    types of interest. At 100 TB: size num_shards to keep a shard's user
+    map at MBs and back the store with RocksDB — state scales with
+    DISTINCT users, the shuffle with batch rows."""
     sharded = events_stream.withColumn(
         "shard", F.pmod(F.xxhash64("user_id"), F.lit(num_shards)).cast("int")
-    )
-    return sharded.groupBy("shard").applyInPandasWithState(
-        _make_update_attribution(conversion, within),
-        ATTR_OUTPUT_SCHEMA,
-        ATTR_STATE_SCHEMA,
-        "update",
-        GroupStateTimeout.NoTimeout,
-    )
-
-
-HOLT_OUTPUT_SCHEMA = "uuid string, time long, value double, level double, trend double"
-HOLT_STATE_SCHEMA = "last_time long, level double, trend double"
-
-
-def _make_update_holt(alpha: float, beta: float):
-    a, b = float(alpha), 1.0 - float(alpha)
-    g, h = float(beta), 1.0 - float(beta)
-
-    def fn(
-        key: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        """Continue one stream's Holt (level, trend) recurrence across
-        micro-batches: state is three scalars (frontier, level, trend);
-        each batch folds its points in time order with the IDENTICAL op
-        sequence as derive.holt_smooth — the level' value is computed once
-        and reused in the trend update, matching the batch lambda — so on
-        an in-order source the emission is bit-equal to the batch fold
-        (the oracle). Order-defined like streaming_ewma: a point behind
-        the frontier raises."""
-        (uuid,) = key
-        if state.exists:
-            last_t, lvl, tr = state.get
-        else:
-            last_t, lvl, tr = None, None, None
-        out_t, out_v, out_l, out_tr = [], [], [], []
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.sort_values(["time", "value"])
-            for t, v in zip(pdf["time"].astype("int64"), pdf["value"]):
-                t, v = int(t), float(v)
-                if last_t is not None and t < last_t:
-                    raise ValueError(
-                        f"stream {uuid}: point at {t} behind the Holt "
-                        f"frontier {last_t} — order-defined operator"
-                    )
-                if lvl is None:
-                    lvl, tr = v, 0.0
-                else:
-                    lp = a * v + b * (lvl + tr)
-                    tr = g * (lp - lvl) + h * tr
-                    lvl = lp
-                last_t = t
-                out_t.append(t)
-                out_v.append(v)
-                out_l.append(lvl)
-                out_tr.append(tr)
-        if not out_t:
-            return
-        state.update((last_t, lvl, tr))
-        yield pd.DataFrame(
-            {
-                "uuid": uuid,
-                "time": out_t,
-                "value": out_v,
-                "level": out_l,
-                "trend": out_tr,
-            }
-        )
-
-    return fn
+    ).withColumn("touch", ~F.col("event_type").eqNullSafe(F.lit(conversion)))
+    return fold_stream(sharded, ["shard"], _attribution_fold(within))
 
 
 def streaming_holt(
@@ -949,100 +508,72 @@ def streaming_holt(
     """Holt double exponential smoothing as a continuous query: per-stream
     keyed state carries (frontier, level, trend) so the 2-state recurrence
     continues across micro-batches; on an in-order source the emission is
-    bit-equal to the batch holt_smooth fold. State is three scalars per
-    stream — O(streams), same class as streaming_ewma."""
+    bit-equal to the batch holt_smooth fold (both fold
+    operators/fold.holt_fold). State is three scalars per stream —
+    O(streams), same class as streaming_ewma. A point behind the frontier
+    raises."""
     if not 0.0 < alpha <= 1.0:
         raise ValueError("alpha must be in (0, 1]")
     if not 0.0 <= beta <= 1.0:
         raise ValueError("beta must be in [0, 1]")
-    return points_stream.groupBy("uuid").applyInPandasWithState(
-        _make_update_holt(alpha, beta),
-        HOLT_OUTPUT_SCHEMA,
-        HOLT_STATE_SCHEMA,
-        "update",
-        GroupStateTimeout.NoTimeout,
-    )
+    return fold_stream(points_stream, ["uuid"], holt_fold(alpha, beta))
 
 
-TWA_OUTPUT_SCHEMA = "uuid string, time long, covered_ns long, twa double"
-TWA_STATE_SCHEMA = "last_t long, last_vq long, num long, cov long"
-
-
-def _make_update_twa(start: int, width: int, quantum: float):
+def _twa_fold(start: int, width: int, quantum: float) -> FoldSpec:
+    """Step-hold TWA: state is the held frontier point (last_t, last_vq)
+    plus the open window's partial (num = Σ vq·held_ns, cov = Σ held_ns).
+    Each point extends the held segment; every window boundary the
+    segment crosses CLOSES that window and emits its (covered_ns, twa) —
+    the batch twa_hold over [start, frontier) minus the still-open
+    frontier window. num stays within int64 for vq·width < 2^63 (e.g.
+    2-decimal values up to ~10^5 with day windows); wider configs belong
+    on the batch path's decimal(38,0)."""
     q = float(round(1.0 / quantum))
 
-    def fn(
-        key: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        """Continue one stream's step-hold TWA across micro-batches: state
-        is the open window's partial (Σ vq·held_ns, Σ held_ns) plus the
-        held frontier point. Each arriving point extends the held segment;
-        every window boundary the segment crosses CLOSES that window and
-        emits its final (covered_ns, twa) — so the emitted union is
-        exactly the batch twa_hold over [start, frontier) minus the
-        still-open frontier window, which is the oracle. Order-defined
-        like the other recurrences: a point behind the frontier raises.
-        num stays within int64 for vq·width < 2^63 (e.g. 2-decimal values
-        up to ~10^5 with day windows); wider configs belong on the batch
-        path's decimal(38,0)."""
-        (uuid,) = key
-        if state.exists:
-            last_t, last_vq, num, cov = state.get
-        else:
-            last_t, last_vq, num, cov = None, None, 0, 0
+    def step(state: tuple, c: dict) -> tuple:
+        last_t, last_vq, num, cov = state
         out_w, out_cov, out_twa = [], [], []
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.sort_values(["time", "value"])
-            for t, vq in zip(
-                pdf["time"].astype("int64"), pdf["vq"].astype("int64")
-            ):
-                t, vq = int(t), int(vq)
-                if last_t is not None and t < last_t:
-                    raise ValueError(
-                        f"stream {uuid}: point at {t} behind the TWA "
-                        f"frontier {last_t} — order-defined operator"
-                    )
-                if last_t is not None:
-                    s = last_t
-                    while True:
-                        w = (s - start) // width
-                        wend = start + (w + 1) * width
-                        if t <= wend:
-                            num += last_vq * (t - s)
-                            cov += t - s
-                            break
-                        num += last_vq * (wend - s)
-                        cov += wend - s
+        for t, vq in zip(c["time"].tolist(), c["vq"].tolist()):
+            if last_t is not None:
+                s = last_t
+                while True:
+                    w = (s - start) // width
+                    wend = start + (w + 1) * width
+                    if t <= wend:
+                        num += last_vq * (t - s)
+                        cov += t - s
+                        break
+                    num += last_vq * (wend - s)
+                    cov += wend - s
+                    out_w.append(w)
+                    out_cov.append(cov)
+                    out_twa.append(float(num) / float(cov) / q)
+                    num, cov = 0, 0
+                    s = wend
+                if (t - start) // width > w:
+                    # segment ended exactly on the boundary: window w is
+                    # complete, the new point opens the next one
+                    if cov > 0:
                         out_w.append(w)
                         out_cov.append(cov)
                         out_twa.append(float(num) / float(cov) / q)
-                        num, cov = 0, 0
-                        s = wend
-                    if (t - start) // width > w:
-                        # segment ended exactly on the boundary: window w
-                        # is complete, the new point opens the next one
-                        if cov > 0:
-                            out_w.append(w)
-                            out_cov.append(cov)
-                            out_twa.append(float(num) / float(cov) / q)
-                        num, cov = 0, 0
-                last_t, last_vq = t, vq
-        if last_t is None:
-            return
-        state.update((last_t, last_vq, num, cov))
-        if out_w:
-            yield pd.DataFrame(
-                {
-                    "uuid": uuid,
-                    "time": [start + w * width for w in out_w],
-                    "covered_ns": out_cov,
-                    "twa": out_twa,
-                }
-            )
+                    num, cov = 0, 0
+            last_t, last_vq = t, vq
+        return (last_t, last_vq, num, cov), {
+            "time": [start + w * width for w in out_w],
+            "covered_ns": out_cov,
+            "twa": out_twa,
+        }
 
-    return fn
+    return FoldSpec(
+        "uuid string, time long, covered_ns long, twa double",
+        "last_t long, last_vq long, num long, cov long",
+        (None, None, 0, 0),
+        step,
+        sort=("time", "value"),
+        frontier=0,
+        late="behind the TWA frontier",
+    )
 
 
 def streaming_twa(
@@ -1055,58 +586,40 @@ def streaming_twa(
     keyed state carries the held frontier point and the open window's
     integer partials; windows emit exactly once, when the held segment
     crosses their end — the at-ingest dual of the batch twa_hold scan,
-    bit-equal to it over the closed windows (the driver oracle)."""
+    bit-equal to it over the closed windows (the driver oracle). A point
+    behind the frontier raises."""
     if width <= 0:
         raise ValueError("window width must be positive")
     with_q = points_stream.withColumn(
         "vq", F.round(F.col("value") / F.lit(value_quantum)).cast("long")
     )
-    return with_q.groupBy("uuid").applyInPandasWithState(
-        _make_update_twa(start, width, value_quantum),
-        TWA_OUTPUT_SCHEMA,
-        TWA_STATE_SCHEMA,
-        "update",
-        GroupStateTimeout.NoTimeout,
-    )
+    return fold_stream(with_q, ["uuid"], _twa_fold(start, width, value_quantum))
 
 
-KMV_OUTPUT_SCHEMA = "uuid string, n_kept long, kth_hash long, kmv_est double"
-KMV_STATE_SCHEMA = "hashes string"
-
-
-def _update_kmv(k: int):
-    """KMV merge for one group: state is the sorted list of the k
-    smallest distinct hashes seen so far (bounded — at most k int64s per
-    group, json-encoded). Merge = set-union the batch's hashes, sort,
-    trim to k: associative and order-independent, so the final state is
-    IDENTICAL to the batch sketch no matter how arrivals were split into
-    micro-batches (the property the entry's oracle asserts)."""
-    import json
-
+def _kmv_fold(k: int) -> FoldSpec:
+    """KMV merge: state is the sorted list of the k smallest distinct
+    hashes seen so far (at most k int64s, json-encoded). Merge =
+    set-union the batch's hashes, sort, trim to k: associative and
+    order-independent, so the final state is IDENTICAL to the batch
+    sketch no matter how arrivals were split into micro-batches."""
     est_num = float((k - 1) * (1 << 52))
 
-    def fn(
-        key: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        uuid = key[0]
-        s = set(json.loads(state.get[0])) if state.exists else set()
-        for pdf in pdfs:
-            s.update(int(h) for h in pdf["h"])
-        merged = sorted(s)[:k]
-        state.update((json.dumps(merged),))
-        n_kept = len(merged)
+    def step(state: tuple, c: dict) -> tuple:
+        merged = sorted(set(json.loads(state[0])).union(c["h"].tolist()))[:k]
         kth = merged[-1] if merged else 0
-        est = est_num / float(kth) if n_kept == k else float(n_kept)
-        yield pd.DataFrame(
-            {
-                "uuid": [uuid],
-                "n_kept": [n_kept],
-                "kth_hash": [kth],
-                "kmv_est": [est],
-            }
-        )
+        est = est_num / float(kth) if len(merged) == k else float(len(merged))
+        return (json.dumps(merged),), {
+            "n_kept": [len(merged)],
+            "kth_hash": [kth],
+            "kmv_est": [est],
+        }
 
-    return fn
+    return FoldSpec(
+        "uuid string, n_kept long, kth_hash long, kmv_est double",
+        "hashes string",
+        ("[]",),
+        step,
+    )
 
 
 def streaming_kmv(events_stream: DataFrame, k: int = 256) -> DataFrame:
@@ -1134,72 +647,43 @@ def streaming_kmv(events_stream: DataFrame, k: int = 256) -> DataFrame:
             10,
         ).cast("long").alias("h"),
     )
-    return hashed.groupBy("uuid").applyInPandasWithState(
-        _update_kmv(k),
-        KMV_OUTPUT_SCHEMA,
-        KMV_STATE_SCHEMA,
-        "update",
-        GroupStateTimeout.NoTimeout,
-    )
+    return fold_stream(hashed, ["uuid"], _kmv_fold(k))
 
 
-HLL_OUTPUT_SCHEMA = (
-    "uuid string, n_seen long, n_registers_used long, hll_est double"
-)
-HLL_STATE_SCHEMA = "regs string, n_seen long"
-
-
-def _update_hll(p: int):
-    """HLL register merge for one group: state is the m=2^p register
-    array (max rank per register) plus a seen-rows counter. Register max
-    is associative AND idempotent, so the converged state is IDENTICAL
-    to the batch registers no matter how arrivals were split or
-    duplicated across retries — stronger than KMV (which needs the
-    set-dedup). The estimate repeats the batch hll_distinct arithmetic
-    in libm floats (python == DuckDB ln bit-exactly; the integer
-    harmonic sum has one division)."""
-    import json
-    import math
-
+def _hll_fold(p: int) -> FoldSpec:
+    """HLL registers: state is the m=2^p register array (max rank per
+    register) plus a seen-rows counter. Register max is associative AND
+    idempotent, so the converged state is IDENTICAL to the batch
+    registers no matter how arrivals were split or duplicated across
+    retries. The estimate repeats the batch hll_distinct arithmetic in
+    libm floats (python == DuckDB ln bit-exactly; the integer harmonic
+    sum has one division)."""
     m = 1 << p
     alpha_m2 = (0.7213 / (1.0 + 1.079 / m)) * m * m * float(1 << 41)
 
-    def fn(
-        key: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        uuid = key[0]
-        if state.exists:
-            regs = json.loads(state.get[0])
-            n_seen = int(state.get[1])
-        else:
-            regs = [0] * m
-            n_seen = 0
-        for pdf in pdfs:
-            n_seen += len(pdf)
-            # vectorized per-batch register max (one pandas groupby, no
-            # python row loop — ~10k rows/batch would crawl otherwise)
-            gm = pdf.groupby("reg")["rank"].max()
-            for r, rank in gm.items():
-                if int(rank) > regs[int(r)]:
-                    regs[int(r)] = int(rank)
-        state.update((json.dumps(regs), n_seen))
+    def step(state: tuple, c: dict) -> tuple:
+        regs = np.array(json.loads(state[0]), dtype=np.int64)
+        np.maximum.at(regs, c["reg"], c["rank"])
+        regs = regs.tolist()
+        n_seen = state[1] + len(c["reg"])
         used = [r for r in regs if r > 0]
         s_used = sum(1 << (41 - r) for r in used)
         n_used = len(used)
-        S = s_used + (m - n_used) * (1 << 41)
-        raw = alpha_m2 / float(S)
+        raw = alpha_m2 / float(s_used + (m - n_used) * (1 << 41))
         v = m - n_used
         est = m * math.log(m / v) if (raw <= 2.5 * m and v > 0) else raw
-        yield pd.DataFrame(
-            {
-                "uuid": [uuid],
-                "n_seen": [n_seen],
-                "n_registers_used": [n_used],
-                "hll_est": [est],
-            }
-        )
+        return (json.dumps(regs), n_seen), {
+            "n_seen": [n_seen],
+            "n_registers_used": [n_used],
+            "hll_est": [est],
+        }
 
-    return fn
+    return FoldSpec(
+        "uuid string, n_seen long, n_registers_used long, hll_est double",
+        "regs string, n_seen long",
+        (json.dumps([0] * m), 0),
+        step,
+    )
 
 
 def streaming_hll(ids_stream: DataFrame, p: int = 8) -> DataFrame:
@@ -1228,19 +712,8 @@ def streaming_hll(ids_stream: DataFrame, p: int = 8) -> DataFrame:
         .withColumn("rank", F.lit(41) - blen)
         .select("uuid", "reg", "rank")
     )
-    return hashed.groupBy("uuid").applyInPandasWithState(
-        _update_hll(p),
-        HLL_OUTPUT_SCHEMA,
-        HLL_STATE_SCHEMA,
-        "update",
-        GroupStateTimeout.NoTimeout,
-    )
+    return fold_stream(hashed, ["uuid"], _hll_fold(p))
 
-
-QUANTILE_OUTPUT_SCHEMA = (
-    "uuid string, time long, n long, p50 double, p90 double, p99 double"
-)
-QUANTILE_STATE_SCHEMA = "wstart long, hist string"
 
 # Exact rational ranks: k = ceil(p*n) computed in INTEGER arithmetic
 # ((num*n + den - 1) // den) so the engine and the SQL oracle pick the
@@ -1248,81 +721,56 @@ QUANTILE_STATE_SCHEMA = "wstart long, hist string"
 QUANTILE_PROBS = ((1, 2, "p50"), (9, 10, "p90"), (99, 100, "p99"))
 
 
-def _make_update_quantile(start: int, width: int, quantum: float):
+def _quantile_fold(start: int, width: int, quantum: float) -> FoldSpec:
+    """Exact per-window quantiles: state is the open window's start and
+    its value histogram (vq -> count, json) — bounded by the DISTINCT
+    quantized values in one window, not the point count, which is what
+    makes an exact (not sketched) quantile affordable at ingest. A window
+    emits once, when the first point beyond its end arrives."""
     q = float(round(1.0 / quantum))
 
-    def fn(
-        key: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        """Exact per-window quantiles as a continuous query. State per
-        stream: the open window's start and its value histogram
-        (vq -> count, json) — bounded by the DISTINCT quantized values in
-        one window, not the point count, which is what makes an exact
-        (not sketched) quantile affordable at ingest. A window emits
-        exactly once, when the first point beyond its end arrives; the
-        emitted set equals the batch order-statistic scan over the closed
-        windows (the oracle). Order-defined like the other recurrences:
-        a point behind the open window raises."""
-        import json
-        import math  # noqa: F401  (doc parity; ranks are integer-only)
-
-        (uuid,) = key
-        if state.exists:
-            wstart, hist_js = state.get
-            hist = {int(k_): int(v) for k_, v in json.loads(hist_js).items()}
-        else:
-            wstart, hist = None, {}
-        out_t, out_n, out_p = [], [], {name: [] for _, _, name in QUANTILE_PROBS}
+    def step(state: tuple, c: dict) -> tuple:
+        wstart, hist_js = state
+        hist = {int(k_): int(v) for k_, v in json.loads(hist_js).items()}
+        out = {"time": [], "n": [], **{name: [] for _, _, name in QUANTILE_PROBS}}
 
         def close(ws: int, h: dict) -> None:
             n = sum(h.values())
             if n == 0:
                 return
-            out_t.append(ws)
-            out_n.append(n)
+            out["time"].append(ws)
+            out["n"].append(n)
             items = sorted(h.items())
             for num, den, name in QUANTILE_PROBS:
                 k = (num * n + den - 1) // den
                 seen = 0
-                for vq, c in items:
-                    seen += c
+                for vq, cnt in items:
+                    seen += cnt
                     if seen >= k:
-                        out_p[name].append(float(vq) / q)
+                        out[name].append(float(vq) / q)
                         break
 
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.sort_values(["time", "vq"])
-            for t, vq in zip(pdf["time"].astype("int64"), pdf["vq"].astype("int64")):
-                t, vq = int(t), int(vq)
-                ws = start + ((t - start) // width) * width
-                if wstart is None:
-                    wstart = ws
-                elif ws < wstart:
-                    raise ValueError(
-                        f"stream {uuid}: point at {t} behind the open "
-                        f"window {wstart} — order-defined operator"
-                    )
-                elif ws > wstart:
-                    close(wstart, hist)
-                    hist = {}
-                    wstart = ws
-                hist[vq] = hist.get(vq, 0) + 1
-        if wstart is None:
-            return
-        state.update((wstart, json.dumps(hist)))
-        if out_t:
-            yield pd.DataFrame(
-                {
-                    "uuid": uuid,
-                    "time": out_t,
-                    "n": out_n,
-                    **{name: out_p[name] for _, _, name in QUANTILE_PROBS},
-                }
-            )
+        for t, vq in zip(c["time"].tolist(), c["vq"].tolist()):
+            ws = start + ((t - start) // width) * width
+            if wstart is None:
+                wstart = ws
+            elif ws > wstart:
+                close(wstart, hist)
+                hist = {}
+                wstart = ws
+            hist[vq] = hist.get(vq, 0) + 1
+        return (wstart, json.dumps(hist)), out
 
-    return fn
+    return FoldSpec(
+        "uuid string, time long, n long, p50 double, p90 double, p99 double",
+        "wstart long, hist string",
+        (None, "{}"),
+        step,
+        sort=("time", "vq"),
+        frontier=0,
+        late="behind the open window",
+        window=(start, width),
+    )
 
 
 def streaming_quantile(
@@ -1336,7 +784,8 @@ def streaming_quantile(
     raw points (qtree has min/mean/max/count aggregates, qtree.go:925-947,
     no quantile plane); here the keyed state carries one value-histogram
     per open window and closed windows emit exactly once, bit-equal to
-    the batch order-statistic scan.
+    the batch order-statistic scan. A point behind the open window
+    raises.
 
     Scale shape: quantization bounds per-window state by the value domain
     (not the arrival count); the histogram union is associative, so
@@ -1348,51 +797,32 @@ def streaming_quantile(
     with_q = points_stream.withColumn(
         "vq", F.round(F.col("value") / F.lit(value_quantum)).cast("long")
     )
-    return with_q.groupBy("uuid").applyInPandasWithState(
-        _make_update_quantile(start, width, value_quantum),
-        QUANTILE_OUTPUT_SCHEMA,
-        QUANTILE_STATE_SCHEMA,
-        "update",
-        GroupStateTimeout.NoTimeout,
-    )
+    return fold_stream(with_q, ["uuid"], _quantile_fold(start, width, value_quantum))
 
 
-COVERAGE_OUTPUT_SCHEMA = (
-    "uuid string, time long, n_expected long, n_present long,"
-    " n_points long, longest_gap_slots long, coverage double"
+COVERAGE_COLUMNS = (
+    "time", "n_expected", "n_present", "n_points", "longest_gap_slots", "coverage"
 )
-COVERAGE_STATE_SCHEMA = "wstart long, occ string"
 
 
-def _make_update_coverage(start: int, width: int, cadence: int):
+def _coverage_fold(start: int, width: int, cadence: int) -> FoldSpec:
+    """Availability vs cadence: state is the open window's start and its
+    occupied-slot histogram (slot -> points, json) — bounded at
+    width/cadence entries by construction, the property that keeps the
+    SLA monitor O(slots) regardless of point rate. A window emits once,
+    when the first point beyond its end arrives."""
     n_exp = width // cadence
 
-    def fn(
-        key: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        """Availability-vs-cadence at ingest: state per stream is the open
-        window's occupied-slot histogram — bounded at width/cadence
-        entries by construction, the property that keeps the SLA monitor
-        O(slots) regardless of point rate. Windows close exactly once
-        (first point beyond the end); closed windows bit-equal the batch
-        coverage scan. Order-defined like the other recurrences."""
-        import json
-
-        (uuid,) = key
-        if state.exists:
-            wstart, occ_js = state.get
-            occ = {int(k_): int(v) for k_, v in json.loads(occ_js).items()}
-        else:
-            wstart, occ = None, {}
+    def step(state: tuple, c: dict) -> tuple:
+        wstart, occ_js = state
+        occ = {int(k_): int(v) for k_, v in json.loads(occ_js).items()}
         rows = []
 
         def close(ws: int, o: dict) -> None:
             if not o:
                 return
             slots = sorted(o)
-            interior = max(
-                (b - a - 1 for a, b in zip(slots, slots[1:])), default=0
-            )
+            interior = max((b - a - 1 for a, b in zip(slots, slots[1:])), default=0)
             longest = max(interior, slots[0], n_exp - 1 - slots[-1])
             rows.append(
                 (
@@ -1405,43 +835,31 @@ def _make_update_coverage(start: int, width: int, cadence: int):
                 )
             )
 
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.sort_values("time")
-            for t in pdf["time"].astype("int64"):
-                t = int(t)
-                ws = start + ((t - start) // width) * width
-                if wstart is None:
-                    wstart = ws
-                elif ws < wstart:
-                    raise ValueError(
-                        f"stream {uuid}: point at {t} behind the open "
-                        f"window {wstart} — order-defined operator"
-                    )
-                elif ws > wstart:
-                    close(wstart, occ)
-                    occ = {}
-                    wstart = ws
-                slot = (t - ws) // cadence
-                occ[slot] = occ.get(slot, 0) + 1
-        if wstart is None:
-            return
-        state.update((wstart, json.dumps(occ)))
-        if rows:
-            yield pd.DataFrame(
-                {
-                    "uuid": uuid,
-                    "time": [r[0] for r in rows],
-                    "n_expected": [r[1] for r in rows],
-                    "n_present": [r[2] for r in rows],
-                    "n_points": [r[3] for r in rows],
-                    "longest_gap_slots": [r[4] for r in rows],
-                    "coverage": [r[5] for r in rows],
-                }
-            )
+        for t in c["time"].tolist():
+            ws = start + ((t - start) // width) * width
+            if wstart is None:
+                wstart = ws
+            elif ws > wstart:
+                close(wstart, occ)
+                occ = {}
+                wstart = ws
+            slot = (t - ws) // cadence
+            occ[slot] = occ.get(slot, 0) + 1
+        return (wstart, json.dumps(occ)), {
+            name: [r[i] for r in rows] for i, name in enumerate(COVERAGE_COLUMNS)
+        }
 
-    return fn
+    return FoldSpec(
+        "uuid string, time long, n_expected long, n_present long,"
+        " n_points long, longest_gap_slots long, coverage double",
+        "wstart long, occ string",
+        (None, "{}"),
+        step,
+        sort=("time",),
+        frontier=0,
+        late="behind the open window",
+        window=(start, width),
+    )
 
 
 def streaming_coverage(
@@ -1453,13 +871,8 @@ def streaming_coverage(
     the coverage ratio, emitted exactly once per closed window. The
     reference has no availability plane at all (uptime there means
     scanning raw points). Keyed state is the open window's occupied-slot
-    histogram — bounded by slots-per-window, not point rate."""
+    histogram — bounded by slots-per-window, not point rate. A point
+    behind the open window raises."""
     if width <= 0 or cadence <= 0 or width % cadence != 0:
         raise ValueError("need width > 0, cadence > 0, cadence | width")
-    return points_stream.groupBy("uuid").applyInPandasWithState(
-        _make_update_coverage(start, width, cadence),
-        COVERAGE_OUTPUT_SCHEMA,
-        COVERAGE_STATE_SCHEMA,
-        "update",
-        GroupStateTimeout.NoTimeout,
-    )
+    return fold_stream(points_stream, ["uuid"], _coverage_fold(start, width, cadence))

@@ -11,10 +11,12 @@ Usage: python scripts/bench_registry.py
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def mutate_ops(reg, n_ops: int, tag: str) -> float:

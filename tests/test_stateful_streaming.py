@@ -5,6 +5,8 @@ running stats across micro-batches, with late data folding into old buckets
 
 from __future__ import annotations
 
+import pytest
+
 from btrdb_server_spark.schemas import POINTS_SCHEMA
 from btrdb_server_spark.streaming.stateful import streaming_stat_windows
 
@@ -598,3 +600,60 @@ def test_streaming_quantile_rejects_out_of_order(spark, tmp_path):
             q.processAllAvailable()
         finally:
             q.stop()
+
+
+# The eight order-defined twins, each with parameters that make it emit on
+# CHUNK_ROWS below (windows of 20 ns, thresholds inside the value range).
+ORDER_DEFINED_TWINS = {
+    "ewma": lambda st, s: st.streaming_ewma(s, alpha=0.25),
+    "deadband": lambda st, s: st.streaming_deadband(s, deadband=2.0),
+    "sdt": lambda st, s: st.streaming_sdt(s, tolerance=0.5),
+    "crossings": lambda st, s: st.streaming_crossings(s, threshold=4.0),
+    "holt": lambda st, s: st.streaming_holt(s),
+    "twa": lambda st, s: st.streaming_twa(s, 0, 20),
+    "quantile": lambda st, s: st.streaming_quantile(s, 0, 20),
+    "coverage": lambda st, s: st.streaming_coverage(s, 0, 20, 10),
+}
+# One stream, out of time order, with a duplicate timestamp (50) whose two
+# rows land in different Arrow chunks at two records per chunk.
+CHUNK_ROWS = [(40, 5.0), (50, 1.0), (60, 7.0), (10, 2.0), (20, 9.0), (30, 3.0), (50, 4.0)]
+
+
+@pytest.mark.parametrize("twin", sorted(ORDER_DEFINED_TWINS))
+def test_twin_sorts_the_whole_group_not_each_arrow_chunk(spark, tmp_path, twin):
+    """A micro-batch group may reach the state function as several Arrow
+    chunks (spark.sql.execution.arrow.maxRecordsPerBatch). One micro-batch
+    holding a stream's rows out of time order must emit what the same rows
+    in order emit: the runner sorts the whole group once, so no chunk
+    boundary can put a later chunk behind an earlier one's frontier."""
+    from btrdb_server_spark.streaming import stateful
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        emitted = {}
+        for tag, rows in (("shuffled", CHUNK_ROWS), ("ordered", sorted(CHUNK_ROWS))):
+            src = str(tmp_path / tag / "src")
+            write_batch(spark, src, [("s", t, v) for t, v in rows])
+            stream = spark.readStream.schema(POINTS_SCHEMA).parquet(src)
+            name = f"chunked_{twin}_{tag}"
+            q = (
+                ORDER_DEFINED_TWINS[twin](stateful, stream)
+                .writeStream.outputMode("update")
+                .format("memory")
+                .queryName(name)
+                .option("checkpointLocation", str(tmp_path / tag / "ckpt"))
+                .start()
+            )
+            try:
+                q.processAllAvailable()
+            finally:
+                q.stop()
+            emitted[tag] = sorted(
+                tuple(r) for r in spark.sql(f"SELECT * FROM {name}").collect()
+            )
+    finally:
+        spark.conf.set(key, old)
+    assert emitted["ordered"]
+    assert emitted["shuffled"] == emitted["ordered"]
