@@ -5637,61 +5637,6 @@ def q_activity_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     return activity_histogram(ev, start=T_2024, end=T_FEB)
 
 
-def _state_partitions(n: int):
-    """Run a stateful-streaming query with spark.sql.shuffle.partitions=n
-    (restored afterwards). The state partition count is FIXED by the
-    shuffle-partition setting at first checkpoint; each state partition
-    pays a python-worker spinup per micro-batch, so the right count
-    tracks KEY CARDINALITY, not CPU count. Measured at sf0.1 on
-    local[32], best-of-2, 2026-08-15:
-
-    - per-stream keyed ops (~5 keys: ewma/holt/sdt/deadband/crossings/
-      sessions/twa/kmv/dedup): 4 partitions — streaming_ewma 3.2 s @2,
-      3.3 s @4, 3.9 s @8; 4 keeps headroom.
-    - (uuid, bucket) keyed (streaming_stat_state, ~3k keys): 9.2 s @2,
-      5.3 s @4, 3.9 s @8, 3.2 s @16, 3.4 s @24, 3.4 s @32, 4.7 s @48
-      -> 16. The round-6 5.4 s regression was exactly the blanket
-      4-partition wrapper starving a many-keyed op.
-    - user-keyed (streaming_attribution, ~2k users): 15.8 s @2, 9.9 s
-      @4, 7.0 s @8, 6.1 s @16, 6.7 s @24, 6.4 s @32 -> 16.
-    - sharded LSH state (streaming_lsh): 6.8 s @2, 5.5 s @4, 4.7 s @8,
-      4.8 s @16 -> 8.
-
-    At production key cardinality the right number is larger still —
-    this wrapper tunes the DRIVER-SCALE fixtures; the operators
-    themselves are partition-count-agnostic (keyed state).
-
-    NOTE (r14): the keyed entries (stat_state 16, lsh 8) now pass their
-    tuned count directly to bounded_state_partitions inside the query
-    function — this outer wrapper was being silently overridden by that
-    context manager's env-default 4, which is exactly the "blanket
-    4-partition wrapper starving a many-keyed op" regression again
-    (stat_state measured 6.5 s @4 vs 4.0 s @16 this round). Attribution
-    stays at 4: its state is 32 hash shards and 4 micro-batches x 16
-    partitions of state-store machinery measured SLOWER (5.1-6.3 s @16
-    vs 4.2 s @4). _small_state remains for the few-key entries (it
-    matches the inner default, and keeps the fetch-side windows small)."""
-    import functools
-
-    def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        @functools.wraps(fn)
-        def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            old = spark.conf.get("spark.sql.shuffle.partitions")
-            spark.conf.set("spark.sql.shuffle.partitions", str(n))
-            try:
-                return fn(spark, sf_dir)
-            finally:
-                spark.conf.set("spark.sql.shuffle.partitions", old)
-
-        return wrapped
-
-    return deco
-
-
-# Few-keys default (per-stream keyed state, ~5 streams in the fixtures).
-_small_state = _state_partitions(4)
-
-
 def q_cube_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouping-sets CUBE over (returnflag, linestatus): detail, both
     rollup levels, and the grand total in ONE Expand+aggregate pass."""
@@ -5929,7 +5874,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "domain_mix": q_domain_mix,
         "dsir_weights": q_dsir_weights,
         "rolling_fingerprint": q_rolling_fingerprint,
-        "streaming_topk": _small_state(q_streaming_topk),
+        "streaming_topk": q_streaming_topk,
         "nearest_after": q_nearest_after,
         "buffer_read_your_writes": q_buffer_read_your_writes,
         "source_profile": q_source_profile,
@@ -5958,9 +5903,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "align_windowed": q_align_windowed,
         "multistream_align": q_multistream_align,
         "nearest_before": q_nearest_before,
-        "streaming_hll": _small_state(q_streaming_hll),
-        "streaming_quantile": _small_state(q_streaming_quantile),
-        "streaming_coverage": _small_state(q_streaming_coverage),
+        "streaming_hll": q_streaming_hll,
+        "streaming_quantile": q_streaming_quantile,
+        "streaming_coverage": q_streaming_coverage,
         "ngram_coverage": q_ngram_coverage,
         "forecast_revenue": q_forecast_revenue,
         "hist_quantiles": q_hist_quantiles,
@@ -6009,7 +5954,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bilateral_trade": q_bilateral_trade,
         "zipf_fit": q_zipf_fit,
         "anova_dow": q_anova_dow,
-        "streaming_kmv": _small_state(q_streaming_kmv),
+        "streaming_kmv": q_streaming_kmv,
         "triangle_count": q_triangle_count,
         "chi2_independence": q_chi2_independence,
         "kmv_distinct": q_kmv_distinct,
@@ -6064,7 +6009,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dormancy_stats": q_dormancy_stats,
         "uplift_quintiles": q_uplift_quintiles,
         "cohort_ltv": q_cohort_ltv,
-        "streaming_twa": _small_state(q_streaming_twa),
+        "streaming_twa": q_streaming_twa,
         "burstiness": q_burstiness,
         "ks_test": q_ks_test,
         "kaplan_meier": q_kaplan_meier,
@@ -6084,7 +6029,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "mann_kendall": q_mann_kendall,
         "theilsen_trend": q_theilsen_trend,
         "holt_smooth": q_holt_smooth,
-        "streaming_holt": _small_state(q_streaming_holt),
+        "streaming_holt": q_streaming_holt,
         "cms_heavy_hitters": q_cms_heavy_hitters,
         "winsorized_stats": q_winsorized_stats,
         "copurchase_pagerank": q_copurchase_pagerank,
@@ -6108,7 +6053,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "value_run_lengths": q_value_run_lengths,
         "deadband_compress": q_deadband_compress,
         "hash_sample": q_hash_sample,
-        "streaming_deadband": _small_state(q_streaming_deadband),
+        "streaming_deadband": q_streaming_deadband,
         "diurnal_profile": q_diurnal_profile,
         "funnel": q_funnel,
         "retention_cohorts": q_retention_cohorts,
@@ -6123,15 +6068,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "threshold_crossings": q_threshold_crossings,
         "excursions": q_excursions,
         "sdt_compress": q_sdt_compress,
-        "streaming_sdt": _small_state(q_streaming_sdt),
+        "streaming_sdt": q_streaming_sdt,
         "seasonal_naive_error": q_seasonal_naive_error,
-        "streaming_crossings": _small_state(q_streaming_crossings),
+        "streaming_crossings": q_streaming_crossings,
         "funnel_windowed": q_funnel_windowed,
-        "streaming_sessions": _small_state(q_streaming_sessions),
+        "streaming_sessions": q_streaming_sessions,
         "decontaminate_lsh": q_decontaminate_lsh,
         "streaming_lsh": q_streaming_lsh,
-        "streaming_ewma": _small_state(q_streaming_ewma),
-        "streaming_dedup": _small_state(q_streaming_dedup),
+        "streaming_ewma": q_streaming_ewma,
+        "streaming_dedup": q_streaming_dedup,
         "streaming_stat_state": q_streaming_stat_state,
         "windows_rewrite": q_windows_rewrite,
         "sql_rollup_serve": q_sql_rollup_serve,

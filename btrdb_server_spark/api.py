@@ -96,12 +96,25 @@ class BTrDB:
             [(uuid, int(t), float(v)) for t, v in buf], POINTS_SCHEMA
         )
 
-    def _with_buffer(self, committed: DataFrame, uuid: str) -> DataFrame:
-        """J1: union-merge of the committed snapshot with the uncommitted
-        buffer (pqm.go:434-476 MergeQueryValuesStream — time order is
-        restored by each operator's own sort)."""
-        bdf = self._buffer_df(uuid)
-        return committed if bdf is None else committed.unionByName(bdf)
+    def _with_buffer(self, uuid: str, version: Optional[int]) -> DataFrame:
+        """J1: one stream's committed snapshot, union-merged at the latest
+        version with its uncommitted buffer (pqm.go:434-476
+        MergeQueryValuesStream — time order is restored by each operator's
+        own sort). Keeps the scan's file partitions."""
+        pts = self.store.stream_points(uuid, version)
+        bdf = self._buffer_df(uuid) if version is None else None
+        return pts if bdf is None else pts.unionByName(bdf)
+
+    def _stream_points(self, uuid: str, version: Optional[int]) -> DataFrame:
+        """The points every single-stream read RPC plans over: _with_buffer
+        narrowed to ONE partition. One stream's answer is small next to
+        Spark's fixed per-job cost, so the operators' groupBy, orderBy and
+        windows find their input already in one partition and plan no
+        exchange (no shuffle-map job, no range-sort sampling job): the
+        read runs as one single-task job, like the reference's one tree
+        descent per query (qtree.go:968-1031). Pushed-down filters still
+        reach the scan below the coalesce."""
+        return self._with_buffer(uuid, version).coalesce(1)
 
     def _commit_buffer(self, uuid: str, extra: Optional[list] = None) -> int:
         self._buffer_birth.pop(uuid, None)
@@ -256,10 +269,7 @@ class BTrDB:
     def raw_values(
         self, uuid: str, start: int, end: int, version: Optional[int] = None
     ) -> DataFrame:
-        pts = self.store.stream_points(uuid, version)
-        if version is None:
-            pts = self._with_buffer(pts, uuid)
-        return raw_values_op(pts, uuid, start, end)
+        return raw_values_op(self._stream_points(uuid, version), uuid, start, end)
 
     def aligned_windows(
         self, uuid: str, start: int, end: int, pw: int, version: Optional[int] = None
@@ -272,17 +282,13 @@ class BTrDB:
 
             raise BTrDBError(ERR_INVALID_POINT_WIDTH, "pointwidth invalid")
         buffered = bool(self._buffers.get(uuid))
+        pts = self._stream_points(uuid, version)
         # The ladder holds committed data only; with an uncommitted buffer
         # the exact answer needs the J2 stat merge — served here by
         # aggregating the unioned raw+buffer points (merger.go:132-214's
         # weighted combine is exactly Spark's partial->final aggregation).
         if version is None and self.ladder is not None and not buffered:
-            return self.ladder.serve_aligned(
-                self.store.stream_points(uuid), uuid, start, end, pw
-            )
-        pts = self.store.stream_points(uuid, version)
-        if version is None:
-            pts = self._with_buffer(pts, uuid)
+            return self.ladder.serve_aligned(pts, uuid, start, end, pw)
         return aw_op(pts, uuid, start, end, pw)
 
     def aligned_windows_all(
@@ -318,13 +324,9 @@ class BTrDB:
         version: Optional[int] = None,
     ) -> DataFrame:
         buffered = bool(self._buffers.get(uuid))
+        pts = self._stream_points(uuid, version)
         if version is None and depth > 0 and self.ladder is not None and not buffered:
-            return self.ladder.serve_windows(
-                self.store.stream_points(uuid), uuid, start, end, width, depth
-            )
-        pts = self.store.stream_points(uuid, version)
-        if version is None:
-            pts = self._with_buffer(pts, uuid)
+            return self.ladder.serve_windows(pts, uuid, start, end, width, depth)
         return windows_op(pts, uuid, start, end, width, depth)
 
     def nearest(
@@ -332,10 +334,7 @@ class BTrDB:
     ) -> DataFrame:
         """J6 + the buffer merge of pqm.go:310-341: the nearest point may be
         uncommitted."""
-        pts = self.store.stream_points(uuid, version)
-        if version is None:
-            pts = self._with_buffer(pts, uuid)
-        return nearest_op(pts, uuid, time, backward)
+        return nearest_op(self._stream_points(uuid, version), uuid, time, backward)
 
     def serve(
         self,
@@ -463,7 +462,9 @@ class BTrDB:
         move a DATASET, not a socket stream — this is the documented
         fast path (README wire table), and the plan is pinned funnel-free
         (no Collect/toPandas) in tests/test_plans.py."""
-        df = self.raw_values(uuid, start, end, version)
+        # The scan's own partitions, not the wire reads' single one: every
+        # task writes its slice in parallel.
+        df = raw_values_op(self._with_buffer(uuid, version), uuid, start, end)
         if fmt == "csv":
             df.write.mode("overwrite").option("header", True).csv(dest)
         else:

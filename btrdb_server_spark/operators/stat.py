@@ -147,10 +147,14 @@ def windows(
         )
 
     # Window spine: every k in [0, n_windows) — holes become count=0 rows
-    # (qtree.go:1149-1179). The spine is one generated row per window and is
-    # broadcast; at scale the agg side stays shuffled by widx only.
+    # (qtree.go:1149-1179). The spine is one generated row per window, in
+    # ONE partition, so the joined windows sort with no exchange; the
+    # aggregate is broadcast against it, and at scale the agg side stays
+    # shuffled by widx only.
     spark = points.sparkSession
-    spine = spark.range(0, n_windows).select(F.col("id").alias("widx"))
+    spine = spark.range(0, n_windows, numPartitions=1).select(
+        F.col("id").alias("widx")
+    )
     return (
         spine.join(agg, "widx", "left")
         .select(

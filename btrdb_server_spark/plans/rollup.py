@@ -337,7 +337,9 @@ class RollupLadder:
     ) -> Optional[DataFrame]:
         """Serving-path view: uuid_bucket partition predicate (foldable hash
         of the literal uuid) prunes the scan to one shard directory, and the
-        bucket range — shiftright is monotone — prunes to the chunk range."""
+        bucket range — shiftright is monotone — prunes to the chunk range.
+        One stream's rollup rows are read as ONE partition, so the serve
+        aggregation and its sort plan no exchange and run as one job."""
         df = self._level_raw(pw)
         if df is None:
             return None
@@ -349,9 +351,7 @@ class RollupLadder:
             pred &= F.col("chunk") >= F.lit(start >> shift)
         if end is not None:
             pred &= F.col("chunk") <= F.lit((end - 1) >> shift)
-        return df.where(pred).select(
-            *ROLLUP_COLS
-        )
+        return df.where(pred).select(*ROLLUP_COLS).coalesce(1)
 
     def _partitioned(self, df: DataFrame, pw: int) -> DataFrame:
         return df.select(
@@ -627,9 +627,14 @@ class RollupLadder:
                 F.sum("cnt").alias("count"),
             )
         )
-        spine = self.spark.range(0, n_windows).select(F.col("id").alias("widx"))
+        # Spine and aggregate are both one partition (one stream's level
+        # rows), so a shuffled-hash join needs no exchange; a broadcast of
+        # the aggregate would cost a second Spark job.
+        spine = self.spark.range(0, n_windows, numPartitions=1).select(
+            F.col("id").alias("widx")
+        )
         return (
-            spine.join(agg, "widx", "left")
+            spine.join(agg.hint("shuffle_hash"), "widx", "left")
             .select(
                 (F.lit(start) + F.col("widx") * F.lit(width)).alias("time"),
                 "min",

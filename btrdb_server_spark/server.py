@@ -17,10 +17,13 @@ this package can still drive every operation:
   reference (5000 points / 1000 ranges / 200 descriptors per message;
   CSV one row per message), so a client parses fixed-size messages
   regardless of result size. Pages are produced LAZILY from
-  `toLocalIterator` — the driver holds at most a few partitions, so a
-  result far bigger than driver memory (or maxResultSize) streams
-  through, like the reference's bounded 5000-point channel
-  (serve.go:141-179). The request lock covers planning and the first
+  `toLocalIterator`, one partition at a time. A single-stream read
+  (RawValues, AlignedWindows, Windows, Nearest, Changes) plans as ONE
+  partition and runs as one Spark job, its pages built in the JVM
+  (_stream_df_fragments), so the driver holds that one answer's pages —
+  like the reference, which answers one stream with one tree descent
+  (qtree.go:968-1031). LookupStreams and GenerateCSV page over their
+  plans' own partitions. The request lock covers planning and the first
   page only, never the client drain.
 - Every response carries `stat`: {"code": 0, "msg": ""} on success, a
   bte/errors.go-mirrored code (constants.py:53-65) on failure — errors
@@ -355,43 +358,42 @@ class BTrDBHttpServer:
     def _stream_df_fragments(self, df, uuid: str, cols: list,
                              values_key: str = "values",
                              batch: int = STREAM_BATCH):
-        """_stream_df for the hot point paths, built so the driver does
-        O(pages) work, not O(points):
+        """_stream_df for the single-stream read RPCs, with the pages built
+        in the JVM so the driver does O(pages) work, not O(points):
 
-        - each row is rendered to its JSON object fragment JVM-side with
-          to_json(struct(cols)) inside the scan job;
-        - fragments are joined into page-sized strings EXECUTOR-side
-          (Arrow-batched mapInPandas), so toLocalIterator ships one
-          ~100 KB string per page instead of one row per point — the
-          per-row pickle shuttle was the measured bottleneck (0.23 ->
-          ~3 Mpts/s on a 2M-point RawValues).
+        - each row is rendered to its JSON object fragment with
+          to_json(struct(cols));
+        - monotonically_increasing_id() numbers the rows in answer order
+          (the read is one sorted partition, so the ids are 0..n-1), and
+          `id div batch` is the page key;
+        - listagg(j, ',') WITHIN GROUP (ORDER BY id) joins each page's
+          fragments in that order, and the pages are sorted by key.
 
-        Pages are `batch`-sized with a shorter remainder page at each
-        partition boundary (the reference's 5000 is likewise a MAX batch
-        size, serve.go:63-68); row order is preserved (toLocalIterator
-        yields partitions in order, rows in partition order — the sorted
-        scan's range partitioning IS the global order). Null struct fields
-        are omitted, matching proto3 JSON (absent = default) — e.g. a
-        Windows count=0 hole carries no min/mean/max."""
+        All of it runs in the read's own stage: over a one-partition input
+        the aggregation and the sort plan no exchange, so the RPC stays
+        one Spark job, with no Python worker. Every page holds exactly
+        `batch` values except the last (the reference's 5000 is the
+        batch size, serve.go:63-68); an empty answer is one empty page.
+        Pages reach the driver through toLocalIterator, which fetches a
+        whole partition at a time: the driver holds one answer's pages
+        (the read's only partition), so a result far bigger than driver
+        memory belongs on export_bulk, not on the wire. Null struct
+        fields are omitted, matching proto3 JSON (absent = default) —
+        e.g. a Windows count=0 hole carries no min/mean/max."""
         from pyspark.sql import functions as F
 
         ver = self._versions(uuid) if uuid is not None else {}
         head = json.dumps({"stat": _OK, **ver})[:-1] + f', "{values_key}": ['
-        frags = df.select(F.to_json(F.struct(*cols)).alias("j"))
-
-        def make_pages(pdfs):
-            import pandas as pd
-
-            buf: list = []
-            for pdf in pdfs:
-                buf.extend(pdf["j"].tolist())
-                while len(buf) >= batch:
-                    yield pd.DataFrame({"page": [",".join(buf[:batch])]})
-                    del buf[:batch]
-            if buf:
-                yield pd.DataFrame({"page": [",".join(buf)]})
-
-        pages = frags.mapInPandas(make_pages, "page string")
+        pages = (
+            df.select(
+                F.monotonically_increasing_id().alias("_id"),
+                F.to_json(F.struct(*cols)).alias("j"),
+            )
+            .groupBy(F.expr(f"_id div {batch}").alias("page"))
+            .agg(F.expr("listagg(j, ',') WITHIN GROUP (ORDER BY _id)").alias("text"))
+            .orderBy("page")
+            .select("text")
+        )
 
         def gen():
             emitted = False

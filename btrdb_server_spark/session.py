@@ -25,13 +25,12 @@ def get_spark(app_name: str = "btrdb_server_spark", cpus: int | None = None) -> 
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
-        # Codec measured on the sorted points plane at 50M points, 2 reps
-        # each: insert is a wash (snappy 11.1-13.5 Mpts/s, zstd 11.5-11.9)
-        # but scans favor snappy decisively (309-325 Mpts/s vs 181-254 —
-        # zstd decompression sits in the scan hot loop). Storage-bound
-        # deployments can trade scan speed for zstd's ~1.9x size win via
-        # SPARK_GRAFT_PARQUET_CODEC=zstd (the reference's delta-delta+
-        # varint reaches ~2.9x, blocktypes.go:159-261).
+        # Session-wide parquet codec. It does NOT govern the points plane:
+        # PointStore writes its version and compaction files with zstd-1
+        # through store._WRITE_TUNING, a per-write option that overrides
+        # this setting. This codec applies to every other parquet write
+        # (rollup levels, tombstones, index stores, exports);
+        # SPARK_GRAFT_PARQUET_CODEC overrides the snappy default.
         .config(
             "spark.sql.parquet.compression.codec",
             os.environ.get("SPARK_GRAFT_PARQUET_CODEC", "snappy"),

@@ -13,8 +13,10 @@ Spark-first equivalent (no Delta in this environment, same semantics):
   every partition with ins_ver > v — version time travel IS partition pruning.
 - `deletes` parquet dataset of interval tombstones (uuid, start, end, ver).
   A point is visible at version v iff ins_ver <= v and no tombstone with
-  ins_ver < ver <= v covers its time. Tombstones are metadata-sized, so the
-  visibility filter is a broadcast anti-join — no shuffle of the big side.
+  ins_ver < ver <= v covers its time. Tombstones are metadata-sized: the
+  driver reads them once per manifest snapshot and every read applies
+  them as a NOT EXISTS predicate over those rows (see points_at), so no
+  read runs a Spark job to scan or broadcast them.
 - `manifest.json`: the commit log — current version + per-stream last-write
   version (what QueryVersion returns, pqm.go:343-361).
 
@@ -39,7 +41,7 @@ from btrdb_server_spark.constants import (
     MAX_INSERT_BATCH,
 )
 from btrdb_server_spark.operators import raw as raw_ops
-from btrdb_server_spark.operators.changes import coalesce_intervals
+from btrdb_server_spark.operators.changes import _gap_islands
 from btrdb_server_spark.schemas import POINTS_SCHEMA
 
 LONG_MAX = (1 << 63) - 1
@@ -102,6 +104,19 @@ FRESH_BUCKET = -1  # sentinel uuid_bucket partition for not-yet-compacted versio
 # and ins_ver < ver is invisible at every version >= ver.
 DELETES_SCHEMA = "uuid string, start long, end long, ver long"
 
+# Driver-held tombstones enter a plan as ONE JSON string literal that
+# from_json types and the optimizer folds once, so a plan's size and its
+# planning time stay flat in the tombstone count (a literal per field made
+# 400 tombstones unplannable).
+_TOMBSTONE_ROWS = "array<struct<uuid:string, start:long, end:long, ver:long>>"
+_TOMBSTONES_BY_UUID = "map<string, array<struct<start:long, end:long, ver:long>>>"
+
+
+def _folded_literal(value, ddl: str):
+    """`value` as a Catalyst literal of type `ddl`. FAILFAST: text that does
+    not parse raises instead of reading as null (null would hide nothing)."""
+    return F.from_json(F.lit(json.dumps(value)), ddl, {"mode": "FAILFAST"})
+
 
 class BTrDBError(Exception):
     """Engine error with a code mirroring bte/errors.go:146-270."""
@@ -150,6 +165,8 @@ class PointStore:
                 }
             )
         self.num_buckets = self._read_manifest().get("num_buckets", num_buckets)
+        # ((version, points_dir), tombstone rows) of the last snapshot read
+        self._tombstone_cache: Optional[tuple] = None
         self.writer = writer
         if writer:
             self.recover()
@@ -410,20 +427,61 @@ class PointStore:
             .parquet(pdir)
         )
 
-    def _deletes(self, m: dict) -> Optional[DataFrame]:
+    def _tombstones(self, m: dict) -> tuple:
+        """The live tombstone rows of snapshot `m`, as dicts with keys uuid,
+        start, end and ver, held on the driver. They are read once per manifest snapshot,
+        keyed on (version, points_dir): every write bumps the version and
+        every compaction flips points_dir, so the key changes whenever the
+        set can. The read is a driver-side parquet read (pyarrow), not a
+        Spark job. Concurrent readers need no lock: a reader uses the
+        cached rows only under its own snapshot's key, so a racing cache
+        write can cost a re-read but never a wrong answer. Rows at or below
+        the compaction point are dropped: every surviving point carries
+        ins_ver >= compacted_through, so no such tombstone hides anything
+        (they stay on disk only for lagging changefeed_deletes readers)."""
         if not m.get("has_deletes"):
-            return None
-        return self.spark.read.schema(DELETES_SCHEMA).parquet(self.deletes_path)
+            return ()
+        key = (m["version"], m.get("points_dir", "points"))
+        cached = self._tombstone_cache
+        if cached is not None and cached[0] == key:
+            return cached[1]
+        import pyarrow.dataset as ds
+
+        table = ds.dataset(self.deletes_path, format="parquet").to_table(
+            columns=["uuid", "start", "end", "ver"]
+        )
+        compacted = m.get("compacted_through", 0)
+        rows = tuple(
+            r for r in table.to_pylist() if compacted < r["ver"] <= m["version"]
+        )
+        self._tombstone_cache = (key, rows)
+        return rows
+
+    def _tombstone_frame(self, rows) -> DataFrame:
+        """Tombstone rows as a one-partition DataFrame: inline of one folded
+        literal over a one-row range. JVM-only, so a plan that unions it in
+        runs no Python worker and no extra job."""
+        return self.spark.range(1, numPartitions=1).select(
+            F.inline(_folded_literal(list(rows), _TOMBSTONE_ROWS))
+        )
 
     def points_at(
         self, version: Optional[int] = None, prefilter=None,
-        m: Optional[dict] = None,
+        m: Optional[dict] = None, uuid: Optional[str] = None,
     ) -> DataFrame:
         """MVCC-visible (uuid, time, value) snapshot as of `version`
-        (None = latest). The ins_ver filter is partition pruning; the
-        tombstone check is a broadcast anti-join. `prefilter` is an optional
+        (None = latest). The ins_ver filter is partition pruning. The
+        tombstone check is an anti-join against the driver-held tombstone
+        rows of the snapshot (_tombstones) with ver <= version, written as
+        a NOT EXISTS predicate: one folded literal map uuid -> that
+        stream's tombstones, probed per row with element_at and exists. A
+        broadcast join would cost a Spark job per read even over a local
+        relation; the predicate costs none, and stays a per-row filter on
+        every plan, fleet or single-stream. `prefilter` is an optional
         partition-level predicate (e.g. uuid_bucket) applied at the scan.
-        `m` is the manifest snapshot to plan against (default: read once)."""
+        `m` is the manifest snapshot to plan against (default: read once).
+        `uuid` narrows the snapshot to one stream: its exact filter, and
+        only that stream's tombstones in the predicate."""
         m = m or self._read_manifest()
         v = m["version"] if version is None else version
         compacted = m.get("compacted_through", 0)
@@ -435,22 +493,22 @@ class PointStore:
         pts = self._raw_points(m).where(F.col("ins_ver") <= F.lit(v))
         if prefilter is not None:
             pts = pts.where(prefilter)
-        dels = self._deletes(m)
-        if dels is not None:
-            dels = dels.where(F.col("ver") <= F.lit(v)).select(
-                F.col("uuid").alias("d_uuid"),
-                F.col("start").alias("d_start"),
-                F.col("end").alias("d_end"),
-                F.col("ver").alias("d_ver"),
+        if uuid is not None:
+            pts = pts.where(F.col("uuid") == F.lit(uuid))
+        by_uuid: dict = {}
+        for d in self._tombstones(m):
+            if d["ver"] <= v and uuid in (None, d["uuid"]):
+                by_uuid.setdefault(d["uuid"], []).append(d)
+        if by_uuid:
+            tombs = _folded_literal(by_uuid, _TOMBSTONES_BY_UUID)
+            hidden = F.exists(
+                F.element_at(tombs, F.col("uuid")),
+                lambda d: (F.col("time") >= d["start"])
+                & (F.col("time") < d["end"])
+                & (F.col("ins_ver") < d["ver"]),
             )
-            pts = pts.join(
-                F.broadcast(dels),
-                (F.col("uuid") == F.col("d_uuid"))
-                & (F.col("time") >= F.col("d_start"))
-                & (F.col("time") < F.col("d_end"))
-                & (F.col("ins_ver") < F.col("d_ver")),
-                "left_anti",
-            )
+            # a stream with no tombstone looks up null: nothing is hidden
+            pts = pts.where(~F.coalesce(hidden, F.lit(False)))
         return pts.select("uuid", "time", "value")
 
     def stream_points(self, uuid: str, version: Optional[int] = None) -> DataFrame:
@@ -460,14 +518,15 @@ class PointStore:
         (cluster_leader.go:21-43) — plus the sentinel fresh dir
         (uuid_bucket=-1, not-yet-compacted ingest tail, pruned inside by
         the uuid-sorted files' row-group stats), plus the exact uuid
-        filter."""
+        filter. Tombstones apply as in points_at, with no Spark job. The
+        scan keeps its file partitions; the wire read paths narrow it to
+        one partition (api.BTrDB._stream_points) so each RPC runs as one
+        job."""
         bucket_pred = (F.col("uuid_bucket") == F.lit(FRESH_BUCKET)) | (
             F.col("uuid_bucket")
             == F.pmod(F.xxhash64(F.lit(uuid)), F.lit(self.num_buckets))
         )
-        return self.points_at(version, prefilter=bucket_pred).where(
-            F.col("uuid") == F.lit(uuid)
-        )
+        return self.points_at(version, prefilter=bucket_pred, uuid=uuid)
 
     # ---------------------------------------------------------- compaction --
 
@@ -548,22 +607,21 @@ class PointStore:
         touched: Optional[list[int]] = None
         if incremental:
             # Touched buckets = home buckets of fresh-tail uuids plus
-            # tombstoned uuids. Both scans are tail-sized: the fresh scan is
-            # partition-pruned to the sentinel dirs, the deletes dataset is
-            # metadata-sized by construction.
+            # live tombstoned uuids. The fresh scan is tail-sized
+            # (partition-pruned to the sentinel dirs); the tombstones are
+            # the driver-held live set, which already excludes files
+            # RETAINED for lagging delete-feeds (folded into the base by an
+            # earlier compaction, so they no longer touch any bucket).
             fresh = (
                 self._raw_points(m)
                 .where(F.col("uuid_bucket") == F.lit(FRESH_BUCKET))
                 .select(bucket_of.alias("b"))
                 .distinct()
             )
-            dels = self._deletes(m)
-            if dels is not None:
-                # `ver > compacted` excludes tombstone files RETAINED for
-                # lagging delete-feeds (folded into the base by an earlier
-                # compaction): they no longer touch any bucket.
+            tombs = self._tombstones(m)
+            if tombs:
                 fresh = fresh.unionByName(
-                    dels.where(F.col("ver") > F.lit(compacted))
+                    self._tombstone_frame(tombs)
                     .select(bucket_of.alias("b"))
                     .distinct()
                 )
@@ -722,7 +780,11 @@ class PointStore:
                 ERR_INVALID_TIME_RANGE,
                 f"from_ver {from_ver} predates compaction point {compacted}",
             )
-        ins = (
+        # One stream's interval set is coarsened and merged in ONE
+        # partition: the distinct, the gap-and-islands window and the sort
+        # then need no exchange, and the answer is one Spark job. The
+        # chunked coalesce_intervals path is for fleet-sized interval sets.
+        ivs = (
             self._raw_points(m)
             .where(
                 (F.col("uuid") == F.lit(uuid))
@@ -732,16 +794,14 @@ class PointStore:
             .select(
                 F.shiftleft(F.shiftright("time", resolution), resolution).alias("start")
             )
-            .distinct()
             .select("start", (F.col("start") + F.lit(1 << resolution)).alias("end"))
         )
-        dels = self._deletes(m)
-        if dels is not None:
-            dranges = dels.where(
-                (F.col("uuid") == F.lit(uuid))
-                & (F.col("ver") > F.lit(from_ver))
-                & (F.col("ver") <= F.lit(to_ver))
-            ).select(
+        dels = [
+            d for d in self._tombstones(m)
+            if d["uuid"] == uuid and from_ver < d["ver"] <= to_ver
+        ]
+        if dels:
+            dranges = self._tombstone_frame(dels).select(
                 F.shiftleft(F.shiftright("start", resolution), resolution).alias("start"),
                 # ceil the end to the next bucket boundary
                 F.shiftleft(
@@ -749,5 +809,5 @@ class PointStore:
                     resolution,
                 ).alias("end"),
             )
-            ins = ins.unionByName(dranges)
-        return coalesce_intervals(ins, chunk_shift=min(resolution + 12, 62))
+            ivs = ivs.unionByName(dranges)
+        return _gap_islands(ivs.coalesce(1).distinct(), []).orderBy("start")

@@ -559,3 +559,117 @@ def test_wire_read_planning_runs_no_spark_jobs(spark, tmp_path, monkeypatch):
         assert 64 not in {v["time"] for v in aw_vals}
     finally:
         srv.stop()
+
+
+def _spark_jobs(sc, group: str, fn):
+    """(number of Spark jobs, result) of fn(), with a streamed result
+    drained inside the job group."""
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+        if hasattr(out, "__next__"):
+            out = [json.loads(p) for p in out]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def test_wire_single_stream_reads_run_one_spark_job(spark, tmp_path):
+    """A single-stream read RPC plans as one partition and runs as one
+    Spark job: no tombstone scan or broadcast, no range-sort sampling
+    job, no shuffle-map job. The store has a compacted base, an
+    uncompacted tail and a tombstone on the read stream. Windows may add
+    the broadcast of its aggregate against the hole spine."""
+    db = BTrDB(spark, str(tmp_path / "jobs"), rollup_levels=[4])
+    db.create("jz", "wire/j")
+    db.insert("jz", [(t, float(t % 7)) for t in range(0, 512, 2)])
+    db.store.compact()
+    db.insert("jz", [(t, 1.0) for t in range(512, 640, 2)])  # fresh tail
+    db.delete("jz", 64, 96)
+    kept = [t for t in range(0, 640, 2) if not 64 <= t < 96]
+    served = []
+    real_serve = db.ladder.serve_aligned
+    db.ladder.serve_aligned = lambda *a: served.append(a) or real_serve(*a)
+    srv = BTrDBHttpServer(db).start()
+    sc = spark.sparkContext
+    span = {"uuid": "jz", "start": 0, "end": 640}
+    try:
+        def jobs(name, rpc, req):
+            return _spark_jobs(sc, f"wire-jobs-{name}", lambda: rpc(req))
+
+        n, pages = jobs("raw", srv.rpc_RawValues, span)
+        assert n == 1
+        assert [v["time"] for p in pages for v in p["values"]] == kept
+
+        for name, req in (
+            ("aligned-version", {**span, "pointWidth": 5,
+                                 "versionMajor": db.store.version}),
+            ("aligned-ladder", {**span, "pointWidth": 5}),
+        ):
+            n, pages = jobs(name, srv.rpc_AlignedWindows, req)
+            assert n == 1, name
+            vals = [v for p in pages for v in p["values"]]
+            assert sum(v["count"] for v in vals) == len(kept), name
+        assert len(served) == 1  # the second read came from the ladder
+
+        n, pages = jobs("changes", srv.rpc_Changes, {
+            "uuid": "jz", "fromMajor": db.store.compacted_through,
+            "toMajor": db.store.version, "resolution": 4,
+        })
+        assert n == 1
+        assert [(r["start"], r["end"]) for p in pages for r in p["ranges"]] == [
+            (64, 96), (512, 640)
+        ]
+
+        n, out = jobs("nearest", srv.rpc_Nearest,
+                      {"uuid": "jz", "time": 90, "backward": True})
+        assert n == 1
+        assert out["value"]["time"] == 62
+
+        for name, req in (
+            ("windows", {**span, "width": 64}),
+            ("windows-depth", {**span, "width": 64, "depth": 4}),
+        ):
+            n, pages = jobs(name, srv.rpc_Windows, req)
+            assert n <= 2, name
+            vals = [v for p in pages for v in p["values"]]
+            assert sum(v["count"] for v in vals) == len(kept), name
+    finally:
+        srv.stop()
+
+
+def test_wire_pages_are_full_and_in_time_order(spark, tmp_path):
+    """Pages hold exactly the batch size except the last, in time order,
+    whatever the store's file layout; Changes pages by at most 1000
+    ranges; an empty answer is one empty page."""
+    from pyspark.sql import functions as F
+
+    db = BTrDB(spark, str(tmp_path / "pages"))
+    n = 12_345
+    db.store.insert_many(  # several files, written out of time order
+        spark.range(0, n, 1, 4).select(
+            F.lit("pg").alias("uuid"),
+            ((F.lit(n - 1) - F.col("id")) * 2).alias("time"),
+            F.col("id").cast("double").alias("value"),
+        )
+    )
+    srv = BTrDBHttpServer(db).start()
+    try:
+        pages = call(srv, "RawValues", {"uuid": "pg", "start": 0, "end": 2 * n})
+        assert [len(p["values"]) for p in pages] == [5000, 5000, 2345]
+        assert [v["time"] for p in pages for v in p["values"]] == list(
+            range(0, 2 * n, 2)
+        )
+        # resolution 0: every point is its own changed range, none adjacent
+        pages = call(srv, "Changes", {"uuid": "pg", "fromMajor": 0,
+                                      "toMajor": db.store.version,
+                                      "resolution": 0})
+        sizes = [len(p["ranges"]) for p in pages]
+        assert max(sizes) <= 1000 and sum(sizes) == n
+        starts = [r["start"] for p in pages for r in p["ranges"]]
+        assert starts == list(range(0, 2 * n, 2))
+        pages = call(srv, "RawValues", {"uuid": "pg", "start": 3 * n, "end": 4 * n})
+        assert len(pages) == 1
+        assert pages[0]["stat"]["code"] == 0 and pages[0]["values"] == []
+    finally:
+        srv.stop()
