@@ -27,7 +27,7 @@ from btrdb_server_spark.operators.stat import windows as windows_op
 from btrdb_server_spark.constants import ERR_INSERT_TOO_BIG, MAX_INSERT_BATCH
 from btrdb_server_spark.plans.rollup import RollupLadder
 from btrdb_server_spark.schemas import POINTS_SCHEMA
-from btrdb_server_spark.store import BTrDBError, PointStore
+from btrdb_server_spark.store import BTrDBError, PointStore, fits_one_task
 
 
 class BTrDB:
@@ -106,15 +106,14 @@ class BTrDB:
         return pts if bdf is None else pts.unionByName(bdf)
 
     def _stream_points(self, uuid: str, version: Optional[int]) -> DataFrame:
-        """The points every single-stream read RPC plans over: _with_buffer
-        narrowed to ONE partition. One stream's answer is small next to
-        Spark's fixed per-job cost, so the operators' groupBy, orderBy and
-        windows find their input already in one partition and plan no
-        exchange (no shuffle-map job, no range-sort sampling job): the
-        read runs as one single-task job, like the reference's one tree
-        descent per query (qtree.go:968-1031). Pushed-down filters still
-        reach the scan below the coalesce."""
-        return self._with_buffer(uuid, version).coalesce(1)
+        """The points every single-stream read RPC plans over: _with_buffer,
+        narrowed to ONE partition when its scan is small (fits_one_task),
+        so the read runs as one single-task Spark job. A larger read keeps
+        the scan's partitions, scans in parallel and streams to the driver
+        one partition at a time. Pushed-down filters still reach the scan
+        below the coalesce."""
+        pts = self._with_buffer(uuid, version)
+        return pts.coalesce(1) if fits_one_task(pts) else pts
 
     def _commit_buffer(self, uuid: str, extra: Optional[list] = None) -> int:
         self._buffer_birth.pop(uuid, None)

@@ -146,17 +146,36 @@ def windows(
             .agg(*_stat_agg())
         )
 
-    # Window spine: every k in [0, n_windows) — holes become count=0 rows
-    # (qtree.go:1149-1179). The spine is one generated row per window, in
-    # ONE partition, so the joined windows sort with no exchange; the
-    # aggregate is broadcast against it, and at scale the agg side stays
-    # shuffled by widx only.
-    spark = points.sparkSession
-    spine = spark.range(0, n_windows, numPartitions=1).select(
-        F.col("id").alias("widx")
+    return spine_join(agg, start, width, n_windows)
+
+
+# Spine rows per partition: a Windows answer of up to this many windows is
+# generated in ONE partition (~60 MB of JSON pages at most); a longer one
+# spreads over more, so its pages still reach the driver a partition at a
+# time.
+SPINE_ROWS_PER_TASK = 1 << 20
+
+
+def spine_join(agg: DataFrame, start: int, width: int, n_windows: int) -> DataFrame:
+    """Windows' answer from its per-window aggregate `agg` (widx, min,
+    mean, max, count): the spine of every k in [0, n_windows) left-joined
+    with `agg`, so holes become count=0 rows (qtree.go:1149-1179), sorted
+    by time. Over a partitioned read `agg` is broadcast, so the points are
+    shuffled once, by widx. When `agg` is already one partition — a small
+    single-stream read — a broadcast would cost a Spark job of its own, so
+    the join is shuffled-hash instead: with the spine also one partition,
+    the join and the sort plan no exchange and the answer is one job."""
+    spine = agg.sparkSession.range(
+        0, n_windows, numPartitions=max(1, -(-n_windows // SPINE_ROWS_PER_TASK))
+    ).select(F.col("id").alias("widx"))
+    # planned, not run: a coalesce(1) below the aggregate makes its output
+    # one partition; a file scan's partitioning is unknown (0)
+    one_partition = (
+        agg._jdf.queryExecution().sparkPlan().outputPartitioning().numPartitions()
+        == 1
     )
     return (
-        spine.join(agg, "widx", "left")
+        spine.join(agg.hint("shuffle_hash") if one_partition else agg, "widx", "left")
         .select(
             (F.lit(start) + F.col("widx") * F.lit(width)).alias("time"),
             F.col("min"),

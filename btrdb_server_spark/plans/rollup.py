@@ -41,7 +41,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from btrdb_server_spark.constants import PWFACTOR
-from btrdb_server_spark.operators.stat import align_floor
+from btrdb_server_spark.operators.stat import align_floor, spine_join
+from btrdb_server_spark.store import fits_one_task
 
 # Default ladder: pw 12 (~4.1 µs) up to pw 48 (~3.26 d), step 6.
 DEFAULT_LEVELS = tuple(range(12, 49, PWFACTOR))
@@ -338,8 +339,9 @@ class RollupLadder:
         """Serving-path view: uuid_bucket partition predicate (foldable hash
         of the literal uuid) prunes the scan to one shard directory, and the
         bucket range — shiftright is monotone — prunes to the chunk range.
-        One stream's rollup rows are read as ONE partition, so the serve
-        aggregation and its sort plan no exchange and run as one job."""
+        When those files are small (fits_one_task) one stream's rollup rows
+        are read as ONE partition, so the serve aggregation and its sort
+        plan no exchange and run as one job."""
         df = self._level_raw(pw)
         if df is None:
             return None
@@ -351,7 +353,8 @@ class RollupLadder:
             pred &= F.col("chunk") >= F.lit(start >> shift)
         if end is not None:
             pred &= F.col("chunk") <= F.lit((end - 1) >> shift)
-        return df.where(pred).select(*ROLLUP_COLS).coalesce(1)
+        df = df.where(pred).select(*ROLLUP_COLS)
+        return df.coalesce(1) if fits_one_task(df) else df
 
     def _partitioned(self, df: DataFrame, pw: int) -> DataFrame:
         return df.select(
@@ -627,23 +630,7 @@ class RollupLadder:
                 F.sum("cnt").alias("count"),
             )
         )
-        # Spine and aggregate are both one partition (one stream's level
-        # rows), so a shuffled-hash join needs no exchange; a broadcast of
-        # the aggregate would cost a second Spark job.
-        spine = self.spark.range(0, n_windows, numPartitions=1).select(
-            F.col("id").alias("widx")
-        )
-        return (
-            spine.join(agg.hint("shuffle_hash"), "widx", "left")
-            .select(
-                (F.lit(start) + F.col("widx") * F.lit(width)).alias("time"),
-                "min",
-                "mean",
-                "max",
-                F.coalesce(F.col("count"), F.lit(0)).alias("count"),
-            )
-            .orderBy("time")
-        )
+        return spine_join(agg, start, width, n_windows)
 
     def serve_aligned(
         self, points: DataFrame, uuid: str, start: int, end: int, pw: int

@@ -17,14 +17,17 @@ this package can still drive every operation:
   reference (5000 points / 1000 ranges / 200 descriptors per message;
   CSV one row per message), so a client parses fixed-size messages
   regardless of result size. Pages are produced LAZILY from
-  `toLocalIterator`, one partition at a time. A single-stream read
-  (RawValues, AlignedWindows, Windows, Nearest, Changes) plans as ONE
-  partition and runs as one Spark job, its pages built in the JVM
-  (_stream_df_fragments), so the driver holds that one answer's pages —
-  like the reference, which answers one stream with one tree descent
-  (qtree.go:968-1031). LookupStreams and GenerateCSV page over their
-  plans' own partitions. The request lock covers planning and the first
-  page only, never the client drain.
+  `toLocalIterator`, one partition at a time — the driver holds at most
+  a few partitions, so a result far bigger than driver memory (or
+  maxResultSize) streams through, like the reference's bounded
+  5000-point channel (serve.go:141-179). A small single-stream read
+  (RawValues, AlignedWindows, Windows, Nearest, Changes; see
+  store.fits_one_task) plans as ONE partition and runs as one Spark job,
+  its pages built in the JVM (_stream_df_fragments) — like the
+  reference, which answers one stream with one tree descent
+  (qtree.go:968-1031); a larger one keeps its scan's partitions. The
+  request lock covers planning and the first page only, never the
+  client drain.
 - Every response carries `stat`: {"code": 0, "msg": ""} on success, a
   bte/errors.go-mirrored code (constants.py:53-65) on failure — errors
   are a payload, not an HTTP 5xx, matching gRPC semantics.
@@ -363,21 +366,22 @@ class BTrDBHttpServer:
 
         - each row is rendered to its JSON object fragment with
           to_json(struct(cols));
-        - monotonically_increasing_id() numbers the rows in answer order
-          (the read is one sorted partition, so the ids are 0..n-1), and
-          `id div batch` is the page key;
+        - monotonically_increasing_id() numbers the rows in answer order:
+          the partition index in the upper 31 bits, the row's place in
+          its sorted partition in the lower 33. The page key keeps the
+          partition bits and divides the row bits by `batch`;
         - listagg(j, ',') WITHIN GROUP (ORDER BY id) joins each page's
           fragments in that order, and the pages are sorted by key.
 
-        All of it runs in the read's own stage: over a one-partition input
-        the aggregation and the sort plan no exchange, so the RPC stays
-        one Spark job, with no Python worker. Every page holds exactly
-        `batch` values except the last (the reference's 5000 is the
-        batch size, serve.go:63-68); an empty answer is one empty page.
-        Pages reach the driver through toLocalIterator, which fetches a
-        whole partition at a time: the driver holds one answer's pages
-        (the read's only partition), so a result far bigger than driver
-        memory belongs on export_bulk, not on the wire. Null struct
+        Over a one-partition read (store.fits_one_task) all of it runs in
+        the read's own stage: the aggregation and the sort plan no
+        exchange, so the RPC stays one Spark job, with no Python worker,
+        and every page holds exactly `batch` values except the last (the
+        reference's 5000 is the batch size, serve.go:63-68). A larger read
+        keeps its partitions and pays an exchange for the pages, each
+        partition's last page may be short, and the pages reach the
+        driver through toLocalIterator one partition at a time, in
+        bounded memory. An empty answer is one empty page. Null struct
         fields are omitted, matching proto3 JSON (absent = default) —
         e.g. a Windows count=0 hole carries no min/mean/max."""
         from pyspark.sql import functions as F
@@ -389,7 +393,12 @@ class BTrDBHttpServer:
                 F.monotonically_increasing_id().alias("_id"),
                 F.to_json(F.struct(*cols)).alias("j"),
             )
-            .groupBy(F.expr(f"_id div {batch}").alias("page"))
+            .groupBy(
+                F.expr(
+                    f"shiftleft(shiftright(_id, 33), 33)"
+                    f" + (_id & {(1 << 33) - 1}) div {batch}"
+                ).alias("page")
+            )
             .agg(F.expr("listagg(j, ',') WITHIN GROUP (ORDER BY _id)").alias("text"))
             .orderBy("page")
             .select("text")

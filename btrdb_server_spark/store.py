@@ -13,10 +13,10 @@ Spark-first equivalent (no Delta in this environment, same semantics):
   every partition with ins_ver > v — version time travel IS partition pruning.
 - `deletes` parquet dataset of interval tombstones (uuid, start, end, ver).
   A point is visible at version v iff ins_ver <= v and no tombstone with
-  ins_ver < ver <= v covers its time. Tombstones are metadata-sized: the
-  driver reads them once per manifest snapshot and every read applies
-  them as a NOT EXISTS predicate over those rows (see points_at), so no
-  read runs a Spark job to scan or broadcast them.
+  ins_ver < ver <= v covers its time. Tombstones are metadata-sized: each
+  read loads its snapshot's rows on the driver and applies them as a NOT
+  EXISTS predicate over those rows (see points_at), so no read runs a
+  Spark job to scan or broadcast them.
 - `manifest.json`: the commit log — current version + per-stream last-write
   version (what QueryVersion returns, pqm.go:343-361).
 
@@ -41,7 +41,7 @@ from btrdb_server_spark.constants import (
     MAX_INSERT_BATCH,
 )
 from btrdb_server_spark.operators import raw as raw_ops
-from btrdb_server_spark.operators.changes import _gap_islands
+from btrdb_server_spark.operators.changes import _gap_islands, coalesce_intervals
 from btrdb_server_spark.schemas import POINTS_SCHEMA
 
 LONG_MAX = (1 << 63) - 1
@@ -118,6 +118,42 @@ def _folded_literal(value, ddl: str):
     return F.from_json(F.lit(json.dumps(value)), ddl, {"mode": "FAILFAST"})
 
 
+# A single-stream read whose plan scans at most this many bytes of parquet
+# runs as ONE partition (fits_one_task); a larger read keeps the scan's
+# partitions, scans in parallel and reaches the driver one partition at a
+# time. The bound is in file bytes, so the points it admits depend on how
+# well they compress: ~0.4M at the ~5 B/point of the serve benchmark's
+# store, at most ~1.1M at the 1.84 B/point of a regular synthetic stream,
+# whose JSON pages (~45 B/point) reach the driver as one task result of
+# ~50 MB, far under spark.driver.maxResultSize. A 2M-point RawValues as
+# one task ran at parity to 19 % slower warm than over its scan's
+# partitions (4 CPUs), so the bound sits below that size.
+ONE_TASK_SCAN_BYTES = 2 << 20
+
+
+def scan_bytes(df: DataFrame) -> int:
+    """Bytes of the files `df`'s plan scans after partition pruning, as
+    Spark's planner lists them; no job runs. An upper bound on what the
+    read returns: row-group pruning only drops more."""
+    leaves = df._jdf.queryExecution().sparkPlan().collectLeaves()
+    total = 0
+    for i in range(leaves.length()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() == "FileSourceScanExec":
+            total += leaf.selectedPartitions().totalFileSize()
+    return total
+
+
+def fits_one_task(df: DataFrame) -> bool:
+    """True when `df` is small enough to read as one partition (see
+    ONE_TASK_SCAN_BYTES). Over a one-partition input the operators'
+    groupBy, orderBy and windows plan no exchange (no shuffle-map job, no
+    range-sort sampling job), so the read runs as one single-task Spark
+    job, like the reference's one tree descent per query
+    (qtree.go:968-1031)."""
+    return scan_bytes(df) <= ONE_TASK_SCAN_BYTES
+
+
 class BTrDBError(Exception):
     """Engine error with a code mirroring bte/errors.go:146-270."""
 
@@ -165,8 +201,6 @@ class PointStore:
                 }
             )
         self.num_buckets = self._read_manifest().get("num_buckets", num_buckets)
-        # ((version, points_dir), tombstone rows) of the last snapshot read
-        self._tombstone_cache: Optional[tuple] = None
         self.writer = writer
         if writer:
             self.recover()
@@ -429,33 +463,24 @@ class PointStore:
 
     def _tombstones(self, m: dict) -> tuple:
         """The live tombstone rows of snapshot `m`, as dicts with keys uuid,
-        start, end and ver, held on the driver. They are read once per manifest snapshot,
-        keyed on (version, points_dir): every write bumps the version and
-        every compaction flips points_dir, so the key changes whenever the
-        set can. The read is a driver-side parquet read (pyarrow), not a
-        Spark job. Concurrent readers need no lock: a reader uses the
-        cached rows only under its own snapshot's key, so a racing cache
-        write can cost a re-read but never a wrong answer. Rows at or below
-        the compaction point are dropped: every surviving point carries
-        ins_ver >= compacted_through, so no such tombstone hides anything
-        (they stay on disk only for lagging changefeed_deletes readers)."""
+        start, end and ver. The read is a driver-side parquet read
+        (pyarrow) of a few KB, not a Spark job (~1.3 ms for three
+        tombstone files). Rows above the snapshot's version belong to a
+        later write and are dropped. So are rows at or below the
+        compaction point: every surviving point carries ins_ver >=
+        compacted_through, so no such tombstone hides anything (they stay
+        on disk only for lagging changefeed_deletes readers)."""
         if not m.get("has_deletes"):
             return ()
-        key = (m["version"], m.get("points_dir", "points"))
-        cached = self._tombstone_cache
-        if cached is not None and cached[0] == key:
-            return cached[1]
         import pyarrow.dataset as ds
 
         table = ds.dataset(self.deletes_path, format="parquet").to_table(
             columns=["uuid", "start", "end", "ver"]
         )
         compacted = m.get("compacted_through", 0)
-        rows = tuple(
+        return tuple(
             r for r in table.to_pylist() if compacted < r["ver"] <= m["version"]
         )
-        self._tombstone_cache = (key, rows)
-        return rows
 
     def _tombstone_frame(self, rows) -> DataFrame:
         """Tombstone rows as a one-partition DataFrame: inline of one folded
@@ -471,8 +496,8 @@ class PointStore:
     ) -> DataFrame:
         """MVCC-visible (uuid, time, value) snapshot as of `version`
         (None = latest). The ins_ver filter is partition pruning. The
-        tombstone check is an anti-join against the driver-held tombstone
-        rows of the snapshot (_tombstones) with ver <= version, written as
+        tombstone check is an anti-join against the snapshot's tombstone
+        rows, read on the driver (_tombstones), with ver <= version, written as
         a NOT EXISTS predicate: one folded literal map uuid -> that
         stream's tombstones, probed per row with element_at and exists. A
         broadcast join would cost a Spark job per read even over a local
@@ -519,9 +544,9 @@ class PointStore:
         (uuid_bucket=-1, not-yet-compacted ingest tail, pruned inside by
         the uuid-sorted files' row-group stats), plus the exact uuid
         filter. Tombstones apply as in points_at, with no Spark job. The
-        scan keeps its file partitions; the wire read paths narrow it to
-        one partition (api.BTrDB._stream_points) so each RPC runs as one
-        job."""
+        scan keeps its file partitions; the wire read paths narrow a small
+        read to one partition (api.BTrDB._stream_points, fits_one_task) so
+        the RPC runs as one job."""
         bucket_pred = (F.col("uuid_bucket") == F.lit(FRESH_BUCKET)) | (
             F.col("uuid_bucket")
             == F.pmod(F.xxhash64(F.lit(uuid)), F.lit(self.num_buckets))
@@ -780,10 +805,6 @@ class PointStore:
                 ERR_INVALID_TIME_RANGE,
                 f"from_ver {from_ver} predates compaction point {compacted}",
             )
-        # One stream's interval set is coarsened and merged in ONE
-        # partition: the distinct, the gap-and-islands window and the sort
-        # then need no exchange, and the answer is one Spark job. The
-        # chunked coalesce_intervals path is for fleet-sized interval sets.
         ivs = (
             self._raw_points(m)
             .where(
@@ -810,4 +831,11 @@ class PointStore:
                 ).alias("end"),
             )
             ivs = ivs.unionByName(dranges)
-        return _gap_islands(ivs.coalesce(1).distinct(), []).orderBy("start")
+        if fits_one_task(ivs):
+            # A small interval set is merged in ONE partition: the
+            # distinct, the gap-and-islands window and the sort need no
+            # exchange, and the answer is one Spark job.
+            return _gap_islands(ivs.coalesce(1).distinct(), []).orderBy("start")
+        return coalesce_intervals(
+            ivs.distinct(), chunk_shift=min(resolution + 12, 62)
+        )

@@ -575,11 +575,10 @@ def _spark_jobs(sc, group: str, fn):
 
 
 def test_wire_single_stream_reads_run_one_spark_job(spark, tmp_path):
-    """A single-stream read RPC plans as one partition and runs as one
-    Spark job: no tombstone scan or broadcast, no range-sort sampling
+    """A small single-stream read RPC plans as one partition and runs as
+    one Spark job: no tombstone scan or broadcast, no range-sort sampling
     job, no shuffle-map job. The store has a compacted base, an
-    uncompacted tail and a tombstone on the read stream. Windows may add
-    the broadcast of its aggregate against the hole spine."""
+    uncompacted tail and a tombstone on the read stream."""
     db = BTrDB(spark, str(tmp_path / "jobs"), rollup_levels=[4])
     db.create("jz", "wire/j")
     db.insert("jz", [(t, float(t % 7)) for t in range(0, 512, 2)])
@@ -631,11 +630,98 @@ def test_wire_single_stream_reads_run_one_spark_job(spark, tmp_path):
             ("windows-depth", {**span, "width": 64, "depth": 4}),
         ):
             n, pages = jobs(name, srv.rpc_Windows, req)
-            assert n <= 2, name
+            assert n == 1, name
             vals = [v for p in pages for v in p["values"]]
             assert sum(v["count"] for v in vals) == len(kept), name
     finally:
         srv.stop()
+
+
+def _result_partitions(sc, group: str) -> int:
+    """Jobs of `group` whose last stage ran one task: toLocalIterator's
+    fetches, one per result partition."""
+    st = sc.statusTracker()
+    return sum(
+        st.getStageInfo(max(st.getJobInfo(j).stageIds)).numTasks == 1
+        for j in st.getJobIdsForGroup(group)
+    )
+
+
+def test_wire_large_reads_keep_the_scan_partitions(spark, tmp_path, monkeypatch):
+    """A read over more than store.ONE_TASK_SCAN_BYTES keeps its scan's
+    partitions: it answers exactly what the one-partition plan answers,
+    and its pages reach the driver one partition at a time, so the driver
+    never holds the whole answer. The bound is lowered below any scan to
+    take that plan on a small store."""
+    from pyspark.sql import functions as F
+
+    from btrdb_server_spark import store as store_mod
+
+    db = BTrDB(spark, str(tmp_path / "large"), rollup_levels=[4])
+    n = 12_345
+    db.store.insert_many(  # several files, written out of time order
+        spark.range(0, n, 1, 4).select(
+            F.lit("lg").alias("uuid"),
+            ((F.lit(n - 1) - F.col("id")) * 2).alias("time"),
+            F.col("id").cast("double").alias("value"),
+        )
+    )
+    db.ladder.rebuild(db.store.points_at())
+    db.store.delete_range("lg", 100, 300)
+    srv = BTrDBHttpServer(db).start()
+    sc = spark.sparkContext
+    span = {"uuid": "lg", "start": 0, "end": 2 * n}
+    reqs = {
+        "RawValues": span,
+        "AlignedWindows": {**span, "pointWidth": 6},
+        "Windows": {**span, "width": 1000},
+        "Changes": {"uuid": "lg", "fromMajor": 0,
+                    "toMajor": db.store.version, "resolution": 3},
+    }
+
+    def answers(tag):
+        out = {}
+        for rpc, req in reqs.items():
+            n_jobs, pages = _spark_jobs(
+                sc, f"large-{tag}-{rpc}", lambda: getattr(srv, f"rpc_{rpc}")(req)
+            )
+            key = "ranges" if rpc == "Changes" else "values"
+            out[rpc] = (n_jobs, [len(p[key]) for p in pages],
+                        [v for p in pages for v in p[key]])
+        return out
+
+    try:
+        small = answers("small")
+        monkeypatch.setattr(store_mod, "ONE_TASK_SCAN_BYTES", -1)
+        large = answers("large")
+        fetches = _result_partitions(sc, "large-large-RawValues")
+    finally:
+        srv.stop()
+    for rpc in reqs:
+        assert small[rpc][0] == 1, rpc
+        assert large[rpc][0] > 1, rpc
+        assert large[rpc][2] == small[rpc][2], rpc
+    kept = [t for t in range(0, 2 * n, 2) if not 100 <= t < 300]
+    assert [v["time"] for v in large["RawValues"][2]] == kept
+    assert small["RawValues"][1] == [5000, 5000, 2245]
+    assert max(large["RawValues"][1]) <= 5000
+    assert fetches > 1
+
+
+def test_scan_bytes_counts_only_the_pruned_files(spark, tmp_path):
+    """store.scan_bytes sizes a read by the files left after partition
+    pruning: one stream's compacted bucket is a fraction of the fleet."""
+    from btrdb_server_spark.store import PointStore, fits_one_task, scan_bytes
+
+    store = PointStore(spark, str(tmp_path / "sized"), num_buckets=8)
+    store.insert_many(spark.createDataFrame(
+        [(f"s{i}", t, float(t)) for i in range(16) for t in range(200)],
+        "uuid string, time long, value double",
+    ))
+    store.compact()
+    one, fleet = scan_bytes(store.stream_points("s3")), scan_bytes(store.points_at())
+    assert 0 < one < fleet
+    assert fits_one_task(store.stream_points("s3"))
 
 
 def test_wire_pages_are_full_and_in_time_order(spark, tmp_path):

@@ -694,20 +694,12 @@ def test_reads_pin_one_manifest_snapshot(spark, tmp_path, monkeypatch):
     assert [(r.start, r.end) for r in ranges] == [(0, 10)]
 
 
-def test_tombstones_follow_the_manifest_snapshot(spark, tmp_path, monkeypatch):
-    """One PointStore handle keeps its tombstones per manifest snapshot: a
-    new delete applies on the next read, a read at an older explicit
-    version does not see it, and compaction keeps the points hidden. The
-    tombstone files are read once per snapshot, not once per read."""
-    import pyarrow.dataset as ds
-
+def test_tombstones_follow_the_manifest_snapshot(spark, tmp_path):
+    """One PointStore handle applies each manifest snapshot's tombstones:
+    a new delete applies on the next read, a read at an older explicit
+    version does not see it, and compaction keeps the points hidden."""
     from btrdb_server_spark.store import PointStore
 
-    reads = []
-    real_dataset = ds.dataset
-    monkeypatch.setattr(
-        ds, "dataset", lambda *a, **k: reads.append(a) or real_dataset(*a, **k)
-    )
     store = PointStore(spark, str(tmp_path / "tomb"))
     store.insert("a", [(t, float(t)) for t in range(10)])
     v1 = store.version
@@ -719,59 +711,11 @@ def test_tombstones_follow_the_manifest_snapshot(spark, tmp_path, monkeypatch):
     store.delete_range("a", 2, 5)
     hidden = [0, 1, 5, 6, 7, 8, 9]
     assert times() == hidden
-    assert times() == hidden
-    assert len(reads) == 1  # both reads used one snapshot's tombstones
     assert times(v1) == list(range(10))
     store.compact()
     assert times() == hidden
     store.delete_range("a", 7, 8)
     assert times() == [0, 1, 5, 6, 8, 9]
-    assert len(reads) == 2
-
-
-def test_tombstone_snapshots_under_concurrent_readers(spark, tmp_path):
-    """Readers at two snapshots share one handle's tombstone cache from many
-    threads: each always gets its own snapshot's rows, whatever the other
-    threads leave in the cache."""
-    import sys
-    import threading
-
-    from btrdb_server_spark.store import PointStore
-
-    store = PointStore(spark, str(tmp_path / "tomb_mt"))
-    store.insert("a", [(t, float(t)) for t in range(10)])
-    store.delete_range("a", 2, 5)
-    m1 = store._read_manifest()
-    store.delete_range("a", 7, 8)
-    m2 = store._read_manifest()
-    want = {
-        1: [("a", 2, 5, m1["version"])],
-        2: [("a", 2, 5, m1["version"]), ("a", 7, 8, m2["version"])],
-    }
-    bad = []
-
-    def read():
-        for i in range(100):
-            k, m = (1, m1) if i % 2 else (2, m2)
-            got = sorted(
-                (d["uuid"], d["start"], d["end"], d["ver"])
-                for d in store._tombstones(m)
-            )
-            if got != want[k]:
-                bad.append((k, got))
-
-    old = sys.getswitchinterval()
-    sys.setswitchinterval(1e-6)
-    try:
-        threads = [threading.Thread(target=read) for _ in range(8)]
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join(timeout=120)
-    finally:
-        sys.setswitchinterval(old)
-    assert not any(t.is_alive() for t in threads)
-    assert bad == []
 
 
 def test_many_tombstones_keep_reads_exact(spark, tmp_path, monkeypatch):
